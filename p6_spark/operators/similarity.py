@@ -25,11 +25,26 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
+def _doubles(a: Column) -> Column:
+    return F.transform(a, lambda x: x.cast("double"))
+
+
+def norm(a: Column) -> Column:
+    """Euclidean norm of an array<float> column, computed in double."""
+    ad = _doubles(a)
+    return F.sqrt(_dot(ad, ad))
+
+
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity of two array<float> columns, computed in double."""
-    ad = F.transform(a, lambda x: x.cast("double"))
-    bd = F.transform(b, lambda x: x.cast("double"))
-    return _dot(ad, bd) / (F.sqrt(_dot(ad, ad)) * F.sqrt(_dot(bd, bd)))
+    return cosine_normed(a, b, norm(a), norm(b))
+
+
+def cosine_normed(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
+    """cosine(a, b) given norm(a) and norm(b), the same double: a join
+    that meets each vector in many pairs computes its norm once per
+    vector instead of once per pair."""
+    return _dot(_doubles(a), _doubles(b)) / (norm_a * norm_b)
 
 
 def brute_force_topk(
@@ -140,13 +155,62 @@ def _signature_sql(
         if planes_sql is not None and p >= min_planes:
             term = f"(case when {p} < {planes_sql} then {term} else 0L end)"
         parts.append(term)
-    guard = (
+    return _dim_guard_sql(vec_sql, dims, "bigint") + "else (" + " + ".join(parts) + ") end"
+
+
+def _dim_guard_sql(vec_sql: str, dims: int, sql_type: str) -> str:
+    """Opening ``case when`` branch that fails a vector longer than the
+    ``dims`` precomputed sign components; the caller adds ``else ... end``."""
+    return (
         f"case when size({vec_sql}) > {dims} then "
         f"cast(raise_error(concat('lsh_signature: embedding dim ', "
         f"cast(size({vec_sql}) as string), "
-        f"' exceeds the {dims} precomputed hyperplane components')) as bigint) "
+        f"' exceeds the {dims} precomputed hyperplane components')) as {sql_type}) "
     )
-    return guard + "else (" + " + ".join(parts) + ") end"
+
+
+# Corpus size from which lsh_candidate_vec_pairs signs through the
+# unrolled path below. Measured on a 4-core host: the unrolled form costs
+# about 1 ms of Janino compile per (plane x table x component) term,
+# while evaluating the higher-order-function form costs about 0.1 us more
+# per row and term, so the break-even is near 10k rows; 64k leaves the
+# small registry corpora on the cheap-to-compile form.
+UNROLLED_SIGNATURE_MIN_ROWS = 1 << 16
+
+
+def _padded_vector(vec_col: str, dims: int) -> Column:
+    """``vec_col`` as ``array<double>`` padded with zeros to exactly
+    ``dims`` components, the input of _unrolled_signature_sql. A vector
+    longer than ``dims`` fails loudly, as in _signature_sql."""
+    return F.expr(
+        _dim_guard_sql(vec_col, dims, "array<double>")
+        + f"else concat(cast({vec_col} as array<double>), "
+        f"array_repeat(0.0D, {dims} - size({vec_col}))) end"
+    )
+
+
+def _unrolled_signature_sql(padded_col: str, num_planes: int, table: int, dims: int) -> str:
+    """The _signature_sql signature, bit for bit, with every dot product
+    written out as ``0.0D + v[0] - v[1] ...`` over a _padded_vector column.
+
+    Higher-order functions (transform/zip_with/aggregate) are
+    CodegenFallback in Spark: one of them inside the posexplode
+    generator keeps the whole Generate out of whole-stage codegen, so
+    every plane term of every row is interpreted. The unrolled sum is
+    plain arithmetic that codegens. It adds the same terms in the same
+    order as the aggregate fold (``x * -1.0`` then ``+`` is exactly
+    ``-``), padding zeros leave the sign test unchanged, and a NULL
+    vector or component still yields a NULL dot product, hence a 0 bit.
+    Its Janino compile cost grows with planes x tables x ``dims``, which
+    is why only corpora of UNROLLED_SIGNATURE_MIN_ROWS rows take it."""
+    parts = []
+    for p in range(num_planes):
+        dot = "0.0D" + "".join(
+            f" {'+' if s > 0 else '-'} {padded_col}[{i}]"
+            for i, s in enumerate(_plane_signs(p, table, dims))
+        )
+        parts.append(f"(case when {dot} > 0 then {1 << p}L else 0L end)")
+    return "(" + " + ".join(parts) + ")"
 
 
 def lsh_signature(
@@ -257,6 +321,11 @@ def lsh_candidate_vec_pairs(
     and — since round 7's 48-plane ceiling — candidate RECALL no longer
     collapses past ~1.3M vectors (tests/test_lsh_recall.py plants exact
     duplicates in a 5M-vector corpus and measures it).
+    - From UNROLLED_SIGNATURE_MIN_ROWS probed rows the signatures are
+      projected columns of plain arithmetic over a padded vector
+      (_unrolled_signature_sql), which codegens; below it the
+      higher-order-function form compiles faster than it runs. Both
+      give the same buckets bit for bit.
 
     EAGER-PROBE CAVEAT (callers beware): building this plan runs ONE
     aggregate job over ``corpus`` (count + first vector size) — the
@@ -290,15 +359,36 @@ def lsh_candidate_vec_pairs(
     n = int(probe["n"]) if probe and probe["n"] is not None else 0
     dims = int(probe["d"]) if probe and probe["d"] is not None else 256
     built = min(max_planes, max(8, (n - 1).bit_length() - 1)) if n >= 2 else 8
-    sigs = F.array(
-        *[
-            lsh_signature(vec_col, built, t, dims=dims)
-            for t in range(num_tables)
-        ]
-    )
-    b = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col)).select(
-        "vid", F.posexplode(sigs).alias("tbl", "bkt")
-    )
+    if n >= UNROLLED_SIGNATURE_MIN_ROWS:
+        # each table's signature is a PROJECTED column over the padded
+        # vector (codegen, no higher-order functions); posexplode then
+        # only gathers attributes. A bare array attribute as the
+        # generator input would let the optimizer infer a size() filter
+        # that re-evaluates every signature below the projection.
+        sig_cols = [f"_s{t}" for t in range(num_tables)]
+        b = (
+            corpus.select(
+                F.col(id_col).alias("vid"), _padded_vector(vec_col, dims).alias("_v")
+            )
+            .select(
+                "vid",
+                *[
+                    F.expr(_unrolled_signature_sql("_v", built, t, dims)).alias(c)
+                    for t, c in enumerate(sig_cols)
+                ],
+            )
+            .select("vid", F.posexplode(F.array(*sig_cols)).alias("tbl", "bkt"))
+        )
+    else:
+        sigs = F.array(
+            *[
+                lsh_signature(vec_col, built, t, dims=dims)
+                for t in range(num_tables)
+            ]
+        )
+        b = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col)).select(
+            "vid", F.posexplode(sigs).alias("tbl", "bkt")
+        )
     # bucket-size cap via a PARTITIONED window (one shuffle, no second
     # evaluation of the signature subtree the way a groupBy+join back
     # would cost; the self-join below then reuses the same exchange)

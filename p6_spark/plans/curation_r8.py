@@ -488,15 +488,17 @@ def _mutual_knn_edges(
     pair gate), so the graph gets its own planted floor.
     ``lsh_kwargs`` pass through to lsh_candidate_vec_pairs (the gate's
     self-check narrows the signature to prove the floor bites)."""
-    from p6_spark.operators.similarity import cosine, lsh_candidate_vec_pairs
+    from p6_spark.operators.similarity import cosine_normed, lsh_candidate_vec_pairs, norm
 
     # pairs feed both union branches -> one lineage cut (the r6 lesson)
     pairs = lsh_candidate_vec_pairs(emb, **lsh_kwargs).localCheckpoint()
     sym = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionAll(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    vs = emb.select(F.col("vec_id").alias("src"), F.col("embedding").alias("va"))
-    vd = emb.select(F.col("vec_id").alias("dst"), F.col("embedding").alias("vb"))
+    # each vector's norm once per vector, not once per candidate pair
+    e = F.col("embedding")
+    vs = emb.select(F.col("vec_id").alias("src"), e.alias("va"), norm(e).alias("na"))
+    vd = emb.select(F.col("vec_id").alias("dst"), e.alias("vb"), norm(e).alias("nb"))
     scored = (
         sym.join(vs, "src")
         .join(vd, "dst")
@@ -511,7 +513,11 @@ def _mutual_knn_edges(
             # A single round(cos * 1e6) re-admits half-ulp disagreements
             # at the grid boundary, where ranking ties would then break
             # differently per engine. Keep the oracle's spelling in sync.
-            F.round(F.round(cosine(F.col("va"), F.col("vb")), 6) * 1000000, 0)
+            F.round(
+                F.round(cosine_normed(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), 6)
+                * 1000000,
+                0,
+            )
             .cast("bigint")
             .alias("cos_x1e6"),
         )

@@ -4,6 +4,17 @@ partition coalescing, skew-join splitting), Arrow on (vectorized
 Python<->JVM), UTC session timezone (oracle comparability), shuffle
 partitions sized to the parallelism rather than the 200 default.
 
+The driver heap (``spark.driver.memory``) defaults to a size derived from
+the machine, not a constant: ``M`` is the smaller of physical memory and
+the cgroup memory limit, Spark's hardware-provisioning guidance gives Spark
+at most 75 % of ``M``, and the JVM's off-heap use is taken at Spark's
+default driver ``memoryOverheadFactor`` of 0.10, so the heap is
+``0.75 * M / 1.1`` (about 10.7 GiB on a 15.7 GiB machine). The remaining
+quarter is headroom for the OS, the Python workers and a second JVM (a
+benchmark subprocess, say). A fixed heap larger than ``M`` lets G1 grow the
+JVM until the kernel kills it. ``P6_SPARK_DRIVER_MEM`` overrides the
+default with any JVM size string (``1g``, ``512m``).
+
 On a real cluster the same builder applies — only master/memory change.
 """
 
@@ -12,6 +23,43 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Spark's hardware-provisioning guidance: at most 75 % of memory to Spark.
+SPARK_MEMORY_FRACTION = 0.75
+# Spark's default spark.driver.memoryOverheadFactor (off-heap per heap byte).
+DRIVER_OVERHEAD_FACTOR = 0.10
+# cgroup v2, then v1; "max" or a huge v1 value means no limit.
+CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def machine_memory_bytes() -> int:
+    """Physical memory, or the cgroup memory limit where that is smaller."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            total = min(total, int(limit))
+    return total
+
+
+def default_driver_memory(total_bytes: int | None = None) -> str:
+    """The derived default heap, ``0.75 * M / 1.1``, as a JVM size in MiB."""
+    if total_bytes is None:
+        total_bytes = machine_memory_bytes()
+    heap = total_bytes * SPARK_MEMORY_FRACTION / (1 + DRIVER_OVERHEAD_FACTOR)
+    return f"{int(heap) >> 20}m"
+
+
+def driver_memory() -> str:
+    """``P6_SPARK_DRIVER_MEM`` if set, else the machine-derived default."""
+    return os.environ.get("P6_SPARK_DRIVER_MEM") or default_driver_memory()
 
 
 def get_spark(
@@ -22,6 +70,12 @@ def get_spark(
     """Build (or reuse) the tuned session.
 
     ``SPARK_GRAFT_CPUS`` overrides parallelism (harness contract).
+    ``spark.driver.memory`` is ``driver_memory()``: ``P6_SPARK_DRIVER_MEM``
+    if set, else ``0.75 * M / 1.1`` of the machine's memory ``M`` (the
+    smaller of physical memory and the cgroup limit), which leaves a
+    quarter of ``M`` for the OS, Python workers and a second JVM; see the
+    module docstring. The heap is fixed when the JVM starts, so it only
+    applies when this call creates the first session of the process.
     ``extra_conf`` overlays builder configs (measurement harnesses, e.g.
     the memory profiler re-enabling the UI for its stage-metrics REST
     API) — only effective when this call CREATES the session.
@@ -38,7 +92,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("P6_SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local-mode split sizing: harness files are a few MB, and the

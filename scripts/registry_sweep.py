@@ -39,13 +39,14 @@ def main() -> int:
 
     from oracle_utils import compare, run_oracle
     from p6_spark.plans.registry import QUERIES, _load_all
+    from p6_spark.session import driver_memory
 
     _load_all()
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .config("spark.sql.shuffle.partitions", str(args.cpus))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", driver_memory())
         .appName("registry_sweep")
         .getOrCreate()
     )

@@ -4,6 +4,7 @@ achieve reasonable recall of the exact top-k on this corpus."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from p6_spark.operators.similarity import brute_force_topk, lsh_ann_topk
@@ -187,3 +188,49 @@ def test_dedup_exact_keeps_min_id(spark):
     )
     kept = sorted(r["doc_id"] for r in dedup_exact(df).collect())
     assert kept == [1, 2]
+
+
+def test_unrolled_signature_equals_fold_signature(spark, sf_dir):
+    """The codegen signature that large corpora take must equal the
+    higher-order-function fold bit for bit, on the harness vectors and
+    on a short vector, a NULL component, a NULL vector and an empty
+    vector."""
+    from p6_spark.operators.similarity import (
+        _signature_sql,
+        _unrolled_signature_sql,
+        _padded_vector,
+    )
+
+    dims, planes = 64, 12
+    edge = spark.createDataFrame(
+        [(-1, [0.5, -0.25]), (-2, [0.5, None, 0.125]), (-3, None), (-4, [])],
+        "vec_id long, embedding array<float>",
+    )
+    corpus = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    corpus = corpus.unionByName(edge)
+    fold = corpus.select(
+        "vec_id",
+        *[F.expr(_signature_sql("embedding", planes, t, dims=dims)) for t in range(2)],
+    )
+    padded = corpus.select("vec_id", _padded_vector("embedding", dims).alias("_v"))
+    unrolled = padded.select(
+        "vec_id",
+        *[F.expr(_unrolled_signature_sql("_v", planes, t, dims)) for t in range(2)],
+    )
+    want = sorted(tuple(r) for r in fold.collect())
+    assert len(want) == corpus.count()
+    assert sorted(tuple(r) for r in unrolled.collect()) == want
+    with pytest.raises(Exception, match="exceeds the 1 precomputed"):
+        edge.select(_padded_vector("embedding", 1)).collect()
+
+
+def test_candidate_pairs_equal_on_both_signature_paths(spark, sf_dir, monkeypatch):
+    """lsh_candidate_vec_pairs gives the same pairs whichever signature
+    path the corpus size selects."""
+    from p6_spark.operators import similarity
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    small = sorted(tuple(r) for r in similarity.lsh_candidate_vec_pairs(emb).collect())
+    monkeypatch.setattr(similarity, "UNROLLED_SIGNATURE_MIN_ROWS", 0)
+    large = sorted(tuple(r) for r in similarity.lsh_candidate_vec_pairs(emb).collect())
+    assert small and large == small
