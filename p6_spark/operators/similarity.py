@@ -169,48 +169,57 @@ def _dim_guard_sql(vec_sql: str, dims: int, sql_type: str) -> str:
     )
 
 
-# Corpus size from which lsh_candidate_vec_pairs signs through the
-# unrolled path below. Measured on a 4-core host: the unrolled form costs
-# about 1 ms of Janino compile per (plane x table x component) term,
-# while evaluating the higher-order-function form costs about 0.1 us more
-# per row and term, so the break-even is near 10k rows; 64k leaves the
-# small registry corpora on the cheap-to-compile form.
-UNROLLED_SIGNATURE_MIN_ROWS = 1 << 16
-
-
-def _padded_vector(vec_col: str, dims: int) -> Column:
-    """``vec_col`` as ``array<double>`` padded with zeros to exactly
-    ``dims`` components, the input of _unrolled_signature_sql. A vector
-    longer than ``dims`` fails loudly, as in _signature_sql."""
-    return F.expr(
-        _dim_guard_sql(vec_col, dims, "array<double>")
-        + f"else concat(cast({vec_col} as array<double>), "
-        f"array_repeat(0.0D, {dims} - size({vec_col}))) end"
-    )
-
-
-def _unrolled_signature_sql(padded_col: str, num_planes: int, table: int, dims: int) -> str:
-    """The _signature_sql signature, bit for bit, with every dot product
-    written out as ``0.0D + v[0] - v[1] ...`` over a _padded_vector column.
+def _unrolled_signatures(
+    corpus: DataFrame, id_col: str, vec_col: str, num_planes: int, num_tables: int, dims: int
+) -> DataFrame:
+    """``(vid, _s0 .. _s{num_tables-1})``: each table's _signature_sql
+    signature, bit for bit, as a projected column of plain arithmetic.
 
     Higher-order functions (transform/zip_with/aggregate) are
     CodegenFallback in Spark: one of them inside the posexplode
     generator keeps the whole Generate out of whole-stage codegen, so
-    every plane term of every row is interpreted. The unrolled sum is
-    plain arithmetic that codegens. It adds the same terms in the same
-    order as the aggregate fold (``x * -1.0`` then ``+`` is exactly
-    ``-``), padding zeros leave the sign test unchanged, and a NULL
-    vector or component still yields a NULL dot product, hence a 0 bit.
-    Its Janino compile cost grows with planes x tables x ``dims``, which
-    is why only corpora of UNROLLED_SIGNATURE_MIN_ROWS rows take it."""
-    parts = []
-    for p in range(num_planes):
-        dot = "0.0D" + "".join(
-            f" {'+' if s > 0 else '-'} {padded_col}[{i}]"
-            for i, s in enumerate(_plane_signs(p, table, dims))
+    every plane term of every row is interpreted. Here each dot product
+    is written out as ``0.0D + _c0 - _c1 ...``, which codegens. It adds
+    the same terms in the same order as the aggregate fold (``x * -1.0``
+    then ``+`` is exactly ``-``), and the zero padding to ``dims`` leaves
+    the sign test unchanged. A vector longer than ``dims`` fails loudly,
+    as in _signature_sql.
+
+    The components are projected ONCE, as non-NULL doubles ``_c{i}``,
+    before the signatures read them, so each term is one subtraction in
+    the generated Java. Reading ``_v[i]`` in every term makes each a
+    bounds- and NULL-checked array access of ~25 lines; a 64-dim stage of
+    4 tables x 8 planes then passes the JVM's 64 KB method limit, so
+    whole-stage codegen fails (Spark logs the error) and the failed
+    compile costs ~5 s on every call. The ``coalesce`` also keeps the
+    optimizer from inlining ``_v[i]`` back into every term. The fold's
+    NULL semantics (a NULL vector or component makes every dot product
+    NULL, hence every bit 0) are kept by ``_ok``. At 64 dims and 15
+    planes (128k rows) the stage still passes the limit and runs with
+    per-operator codegen, still ~6x faster than the fold."""
+    padded = F.expr(
+        _dim_guard_sql(vec_col, dims, "array<double>")
+        + f"else concat(cast({vec_col} as array<double>), "
+        f"array_repeat(0.0D, {dims} - size({vec_col}))) end"
+    )
+    sigs = []
+    for t in range(num_tables):
+        parts = []
+        for p in range(num_planes):
+            dot = "0.0D" + "".join(
+                f" {'+' if s > 0 else '-'} _c{i}" for i, s in enumerate(_plane_signs(p, t, dims))
+            )
+            parts.append(f"(case when {dot} > 0 then {1 << p}L else 0L end)")
+        sigs.append(f"case when _ok then {' + '.join(parts)} else 0L end as _s{t}")
+    return (
+        corpus.select(F.col(id_col).alias("vid"), padded.alias("_v"))
+        .selectExpr(
+            "vid",
+            "forall(_v, x -> x is not null) as _ok",
+            *[f"coalesce(_v[{i}], 0.0D) as _c{i}" for i in range(dims)],
         )
-        parts.append(f"(case when {dot} > 0 then {1 << p}L else 0L end)")
-    return "(" + " + ".join(parts) + ")"
+        .selectExpr("vid", *sigs)
+    )
 
 
 def lsh_signature(
@@ -321,11 +330,9 @@ def lsh_candidate_vec_pairs(
     and — since round 7's 48-plane ceiling — candidate RECALL no longer
     collapses past ~1.3M vectors (tests/test_lsh_recall.py plants exact
     duplicates in a 5M-vector corpus and measures it).
-    - From UNROLLED_SIGNATURE_MIN_ROWS probed rows the signatures are
-      projected columns of plain arithmetic over a padded vector
-      (_unrolled_signature_sql), which codegens; below it the
-      higher-order-function form compiles faster than it runs. Both
-      give the same buckets bit for bit.
+    - The signatures are projected columns of plain arithmetic
+      (_unrolled_signatures), which codegens, with the same buckets as
+      the higher-order-function form of lsh_signature bit for bit.
 
     EAGER-PROBE CAVEAT (callers beware): building this plan runs ONE
     aggregate job over ``corpus`` (count + first vector size) — the
@@ -359,36 +366,14 @@ def lsh_candidate_vec_pairs(
     n = int(probe["n"]) if probe and probe["n"] is not None else 0
     dims = int(probe["d"]) if probe and probe["d"] is not None else 256
     built = min(max_planes, max(8, (n - 1).bit_length() - 1)) if n >= 2 else 8
-    if n >= UNROLLED_SIGNATURE_MIN_ROWS:
-        # each table's signature is a PROJECTED column over the padded
-        # vector (codegen, no higher-order functions); posexplode then
-        # only gathers attributes. A bare array attribute as the
-        # generator input would let the optimizer infer a size() filter
-        # that re-evaluates every signature below the projection.
-        sig_cols = [f"_s{t}" for t in range(num_tables)]
-        b = (
-            corpus.select(
-                F.col(id_col).alias("vid"), _padded_vector(vec_col, dims).alias("_v")
-            )
-            .select(
-                "vid",
-                *[
-                    F.expr(_unrolled_signature_sql("_v", built, t, dims)).alias(c)
-                    for t, c in enumerate(sig_cols)
-                ],
-            )
-            .select("vid", F.posexplode(F.array(*sig_cols)).alias("tbl", "bkt"))
-        )
-    else:
-        sigs = F.array(
-            *[
-                lsh_signature(vec_col, built, t, dims=dims)
-                for t in range(num_tables)
-            ]
-        )
-        b = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col)).select(
-            "vid", F.posexplode(sigs).alias("tbl", "bkt")
-        )
+    # posexplode only gathers the projected signature columns. A bare
+    # array attribute as the generator input would let the optimizer
+    # infer a size() filter that re-evaluates every signature below the
+    # projection.
+    sig_cols = [f"_s{t}" for t in range(num_tables)]
+    b = _unrolled_signatures(corpus, id_col, vec_col, built, num_tables, dims).select(
+        "vid", F.posexplode(F.array(*sig_cols)).alias("tbl", "bkt")
+    )
     # bucket-size cap via a PARTITIONED window (one shuffle, no second
     # evaluation of the signature subtree the way a groupBy+join back
     # would cost; the self-join below then reuses the same exchange)

@@ -10,10 +10,18 @@ the cgroup memory limit, Spark's hardware-provisioning guidance gives Spark
 at most 75 % of ``M``, and the JVM's off-heap use is taken at Spark's
 default driver ``memoryOverheadFactor`` of 0.10, so the heap is
 ``0.75 * M / 1.1`` (about 10.7 GiB on a 15.7 GiB machine). The remaining
-quarter is headroom for the OS, the Python workers and a second JVM (a
-benchmark subprocess, say). A fixed heap larger than ``M`` lets G1 grow the
+quarter is headroom for the OS and the Python workers. It does not hold a
+second JVM at the same default: two such JVMs have heap ceilings of about
+``1.36 * M`` together, so a second JVM started while the first is alive
+(a ``bench.py`` subprocess, say) fits only when it pins a small heap with
+``P6_SPARK_DRIVER_MEM``. A fixed heap larger than ``M`` lets G1 grow the
 JVM until the kernel kills it. ``P6_SPARK_DRIVER_MEM`` overrides the
 default with any JVM size string (``1g``, ``512m``).
+
+The cgroup limit is read for the process's own cgroup and each of its
+ancestors (from ``/proc/self/cgroup``), so a limited sub-cgroup on a host
+without a cgroup namespace (a systemd slice, a CI runner) counts too; the
+limit files at the top of the cgroup mount are the fallback.
 
 On a real cluster the same builder applies — only master/memory change.
 """
@@ -28,17 +36,50 @@ from pyspark.sql import SparkSession
 SPARK_MEMORY_FRACTION = 0.75
 # Spark's default spark.driver.memoryOverheadFactor (off-heap per heap byte).
 DRIVER_OVERHEAD_FACTOR = 0.10
-# cgroup v2, then v1; "max" or a huge v1 value means no limit.
+CGROUP_ROOT = "/sys/fs/cgroup"
+PROC_SELF_CGROUP = "/proc/self/cgroup"
+# cgroup v2, then v1, at the top of the mount (the process's own cgroup
+# inside a cgroup namespace); "max" or a huge v1 value means no limit.
 CGROUP_MEMORY_LIMITS = (
     "/sys/fs/cgroup/memory.max",
     "/sys/fs/cgroup/memory/memory.limit_in_bytes",
 )
 
 
+def own_cgroup_limit_files() -> list[str]:
+    """The memory limit files of this process's own cgroup and of each
+    ancestor below the mount root, read from ``PROC_SELF_CGROUP``: the
+    ``0::<path>`` line (v2, ``memory.max``) and the line whose
+    controllers include ``memory`` (v1, ``memory.limit_in_bytes``)."""
+    try:
+        with open(PROC_SELF_CGROUP) as f:
+            lines = f.read().splitlines()
+    except OSError:
+        return []
+    files = []
+    for line in lines:
+        fields = line.split(":", 2)
+        if len(fields) != 3:
+            continue
+        hierarchy, controllers, path = fields
+        if hierarchy == "0" and not controllers:
+            base, name = CGROUP_ROOT, "memory.max"
+        elif "memory" in controllers.split(","):
+            base, name = os.path.join(CGROUP_ROOT, "memory"), "memory.limit_in_bytes"
+        else:
+            continue
+        parts = [p for p in path.split("/") if p]
+        while parts:
+            files.append(os.path.join(base, *parts, name))
+            parts.pop()
+    return files
+
+
 def machine_memory_bytes() -> int:
-    """Physical memory, or the cgroup memory limit where that is smaller."""
+    """Physical memory, or the smallest cgroup memory limit that applies
+    to this process where that is smaller."""
     total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    for path in CGROUP_MEMORY_LIMITS:
+    for path in own_cgroup_limit_files() + list(CGROUP_MEMORY_LIMITS):
         try:
             with open(path) as f:
                 limit = f.read().strip()
@@ -73,7 +114,8 @@ def get_spark(
     ``spark.driver.memory`` is ``driver_memory()``: ``P6_SPARK_DRIVER_MEM``
     if set, else ``0.75 * M / 1.1`` of the machine's memory ``M`` (the
     smaller of physical memory and the cgroup limit), which leaves a
-    quarter of ``M`` for the OS, Python workers and a second JVM; see the
+    quarter of ``M`` for the OS and the Python workers; a second JVM
+    alive at the same time must pin ``P6_SPARK_DRIVER_MEM``. See the
     module docstring. The heap is fixed when the JVM starts, so it only
     applies when this call creates the first session of the process.
     ``extra_conf`` overlays builder configs (measurement harnesses, e.g.

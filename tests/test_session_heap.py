@@ -43,9 +43,47 @@ def test_default_heap_within_cgroup_limit(tmp_path, monkeypatch, no_override, cg
     limit_file = tmp_path / "memory.max"
     limit_file.write_text(cgroup_text)
     monkeypatch.setattr(session, "CGROUP_MEMORY_LIMITS", (str(limit_file),))
+    monkeypatch.setattr(session, "PROC_SELF_CGROUP", str(tmp_path / "no_proc_cgroup"))
     limit = int(cgroup_text) if cgroup_text.strip().isdigit() else _physical_bytes()
     assert session.machine_memory_bytes() == min(limit, _physical_bytes())
     assert _jvm_bytes(session.driver_memory()) <= 0.75 * min(limit, _physical_bytes()) / 1.1
+
+
+@pytest.mark.parametrize(
+    "proc_line, limit_dir, limit_name",
+    [
+        # cgroup v1 without a namespace: a limited container cgroup
+        ("4:memory:/process_api/job7", "memory/process_api/job7", "memory.limit_in_bytes"),
+        # cgroup v2 without a namespace: a limited systemd slice above the service
+        ("0::/ci.slice/runner.service", "ci.slice", "memory.max"),
+    ],
+)
+def test_default_heap_within_own_cgroup_limit(
+    tmp_path, monkeypatch, no_override, proc_line, limit_dir, limit_name
+):
+    """A limit on the process's own cgroup, or on an ancestor, below the
+    mount root counts, though the files at the top of the mount say
+    "unlimited"."""
+    root = tmp_path / "cgroup"
+    (root / "memory").mkdir(parents=True)
+    (root / "memory.max").write_text("max\n")
+    (root / "memory" / "memory.limit_in_bytes").write_text("9223372036854771712\n")
+    (root / limit_dir).mkdir(parents=True, exist_ok=True)
+    (root / limit_dir / limit_name).write_text(f"{2 << 30}\n")
+    if limit_name == "memory.max":
+        (root / limit_dir / "runner.service").mkdir()
+        (root / limit_dir / "runner.service" / "memory.max").write_text("max\n")
+    proc = tmp_path / "proc_self_cgroup"
+    proc.write_text(f"9:pids:/\n{proc_line}\n1:cpu:/\n")
+    monkeypatch.setattr(session, "CGROUP_ROOT", str(root))
+    monkeypatch.setattr(session, "PROC_SELF_CGROUP", str(proc))
+    monkeypatch.setattr(
+        session,
+        "CGROUP_MEMORY_LIMITS",
+        (str(root / "memory.max"), str(root / "memory" / "memory.limit_in_bytes")),
+    )
+    assert session.machine_memory_bytes() == min(2 << 30, _physical_bytes())
+    assert _jvm_bytes(session.driver_memory()) <= 0.75 * (2 << 30) / 1.1
 
 
 def test_default_heap_formula():

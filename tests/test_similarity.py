@@ -191,15 +191,11 @@ def test_dedup_exact_keeps_min_id(spark):
 
 
 def test_unrolled_signature_equals_fold_signature(spark, sf_dir):
-    """The codegen signature that large corpora take must equal the
-    higher-order-function fold bit for bit, on the harness vectors and
-    on a short vector, a NULL component, a NULL vector and an empty
-    vector."""
-    from p6_spark.operators.similarity import (
-        _signature_sql,
-        _unrolled_signature_sql,
-        _padded_vector,
-    )
+    """The codegen signature lsh_candidate_vec_pairs buckets by must
+    equal the higher-order-function fold bit for bit, on the harness
+    vectors and on a short vector, a NULL component, a NULL vector and
+    an empty vector."""
+    from p6_spark.operators.similarity import _signature_sql, _unrolled_signatures
 
     dims, planes = 64, 12
     edge = spark.createDataFrame(
@@ -212,25 +208,9 @@ def test_unrolled_signature_equals_fold_signature(spark, sf_dir):
         "vec_id",
         *[F.expr(_signature_sql("embedding", planes, t, dims=dims)) for t in range(2)],
     )
-    padded = corpus.select("vec_id", _padded_vector("embedding", dims).alias("_v"))
-    unrolled = padded.select(
-        "vec_id",
-        *[F.expr(_unrolled_signature_sql("_v", planes, t, dims)) for t in range(2)],
-    )
+    unrolled = _unrolled_signatures(corpus, "vec_id", "embedding", planes, 2, dims)
     want = sorted(tuple(r) for r in fold.collect())
     assert len(want) == corpus.count()
     assert sorted(tuple(r) for r in unrolled.collect()) == want
     with pytest.raises(Exception, match="exceeds the 1 precomputed"):
-        edge.select(_padded_vector("embedding", 1)).collect()
-
-
-def test_candidate_pairs_equal_on_both_signature_paths(spark, sf_dir, monkeypatch):
-    """lsh_candidate_vec_pairs gives the same pairs whichever signature
-    path the corpus size selects."""
-    from p6_spark.operators import similarity
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    small = sorted(tuple(r) for r in similarity.lsh_candidate_vec_pairs(emb).collect())
-    monkeypatch.setattr(similarity, "UNROLLED_SIGNATURE_MIN_ROWS", 0)
-    large = sorted(tuple(r) for r in similarity.lsh_candidate_vec_pairs(emb).collect())
-    assert small and large == small
+        _unrolled_signatures(edge, "vec_id", "embedding", 1, 1, 1).collect()
