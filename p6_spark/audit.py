@@ -3,11 +3,18 @@ distinctive semantic: a stairval Notepad collects errors/warnings, errors
 drop the offending ROW (or table), never the RUN; the CLI exits 0 and
 prints the issue report (src/P6/__main__.py:258-268).
 
-Spark mapping: every pipeline stage returns (valid_df, audit_df) where
-audit_df is a DataFrame of (step, sheet, level, message) rows — the
-dead-letter pattern. Audit rows are produced with column expressions
-(row-correlated, exactly-once) — never with side-effecting accumulators,
-which Spark does not replay exactly-once on task retry.
+Spark mapping: every sheet gets ONE projection that attaches
+``issues: array<struct<level, message, drop>>`` to each row
+(``with_issues``). The row survives when none of its issues drops it
+(``kept``), and the sheet's audit rows (step, sheet, level, message) are
+``explode(issues)`` (``issue_audit``). A row is therefore either kept or
+carries the issue that dropped it: there is no ``filter(p)`` /
+``filter(~p)`` pair for a NULL predicate to slip between. Errors drop
+their row unless the reference only reports them (its HGVS checks);
+the NAD placeholder is the one warning that drops its row. Audit rows
+are column expressions (row-correlated, exactly-once) — never
+side-effecting accumulators, which Spark does not replay exactly-once on
+task retry.
 """
 
 from __future__ import annotations
@@ -18,6 +25,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from p6_spark.session import local_frame
+
 AUDIT_SCHEMA = T.StructType(
     [
         T.StructField("step", T.StringType(), False),
@@ -27,27 +36,73 @@ AUDIT_SCHEMA = T.StructType(
     ]
 )
 
+ISSUES_TYPE = "array<struct<level:string,message:string,drop:boolean>>"
 
-def empty_audit(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], AUDIT_SCHEMA)
+
+@dataclass
+class StageResult:
+    """A pipeline stage's outputs: surviving rows, audit rows, and every
+    input row with its ``issues`` (None for a table rejected at plan
+    time)."""
+
+    valid: DataFrame
+    audit: DataFrame
+    checked: DataFrame | None = None
 
 
 def audit_entries(spark: SparkSession, entries: list[tuple[str, str, str, str]]) -> DataFrame:
     """Driver-side (plan-time) audit rows, e.g. missing-column table
     rejections — these are metadata checks, not data scans."""
-    return spark.createDataFrame(entries, AUDIT_SCHEMA)
+    return local_frame(spark, entries, AUDIT_SCHEMA)
 
 
-def audit_from_rows(
-    df: DataFrame, condition: Column, step: str, sheet: str, level: str, message: Column
-) -> DataFrame:
-    """Data-derived audit rows: one per row matching `condition`, with a
-    row-correlated message column."""
-    return df.filter(condition).select(
-        F.lit(step).alias("step"),
-        F.lit(sheet).alias("sheet"),
-        F.lit(level).alias("level"),
-        message.cast("string").alias("message"),
+def reject_missing(
+    spark: SparkSession,
+    df: DataFrame,
+    required: set[str],
+    schema: T.StructType,
+    step: str,
+    sheet: str,
+) -> StageResult | None:
+    """Table-level rejection (reference src/P6/mapper.py:558-563): an
+    empty ``schema`` frame and one audit row when ``df`` lacks required
+    columns, else None. The patient ID is the first column, not a name."""
+    missing = sorted(required - set(df.columns) - {"patient_ID"})
+    if not missing:
+        return None
+    entry = (step, sheet, "error", f"missing required columns: {missing}")
+    return StageResult(valid=local_frame(spark, [], schema), audit=audit_entries(spark, [entry]))
+
+
+def issue(cond: Column, level: str, message: Column, drop: bool | None = None) -> Column:
+    """One possible issue of a row: the issue struct where ``cond`` is
+    true, NULL elsewhere (a NULL ``cond`` raises no issue). ``drop``
+    defaults to ``level == 'error'``."""
+    return F.when(
+        cond,
+        F.struct(
+            F.lit(level).alias("level"),
+            message.cast("string").alias("message"),
+            F.lit(level == "error" if drop is None else drop).alias("drop"),
+        ),
+    )
+
+
+def with_issues(df: DataFrame, *issues: Column) -> DataFrame:
+    """``df`` plus its ``issues`` column: the raised ones of ``issues``."""
+    raised = F.filter(F.array(*issues), lambda i: i.isNotNull()) if issues else F.array()
+    return df.withColumn("issues", raised.cast(ISSUES_TYPE))
+
+
+def kept(checked: DataFrame) -> DataFrame:
+    """The rows of a ``with_issues`` frame that no issue drops."""
+    return checked.filter(~F.exists("issues", lambda i: i["drop"]))
+
+
+def issue_audit(checked: DataFrame, step: str, sheet: str) -> DataFrame:
+    """The audit rows of a ``with_issues`` frame: one per issue."""
+    return checked.select(F.inline("issues")).select(
+        F.lit(step).alias("step"), F.lit(sheet).alias("sheet"), "level", "message"
     )
 
 
@@ -58,30 +113,12 @@ def union_audits(*audits: DataFrame) -> DataFrame:
     return out
 
 
-@dataclass
-class StageResult:
-    """A pipeline stage's two outputs: surviving rows + audit rows."""
-
-    valid: DataFrame
-    audit: DataFrame
-
-
-def split_on(
-    df: DataFrame, predicate: Column, step: str, sheet: str, message: Column
-) -> StageResult:
-    """Dead-letter split: rows passing `predicate` survive; the rest
-    become 'error' audit rows (row dropped, run continues)."""
-    ok = df.filter(predicate)
-    bad = audit_from_rows(df, ~predicate, step, sheet, "error", message)
-    return StageResult(valid=ok, audit=bad)
-
-
 def dead_letter_rows(df: DataFrame, predicate: Column) -> tuple[DataFrame, DataFrame]:
     """Schema-preserving dead-letter split: (valid, dead), both with the
     ORIGINAL columns — for callers that aggregate the dead side (per-key
     rejection counts in a curation manifest) instead of, or before,
-    rendering it into AUDIT_SCHEMA text rows via ``audit_from_rows``.
-    Same drop-rows-never-runs semantics as ``split_on`` (reference:
+    rendering it into AUDIT_SCHEMA text rows. Same drop-rows-never-runs
+    semantics as the sheets' ``issues`` (reference:
     src/P6/__main__.py:258-268).
 
     NULL-safe (round-11 ADVICE): a NULL predicate routes the row to the

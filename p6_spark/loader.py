@@ -2,10 +2,10 @@
 selection. Mirrors the reference loader (src/P6/loader.py:30-67) and
 table chooser (src/P6/mapper.py:502-541), Spark-first:
 
-- Workbooks are small (driver-side read via pandas/openpyxl when the
-  dependency exists, or a directory of CSVs) and become Spark DataFrames
-  via createDataFrame — the heavy data paths (harness parquet) never go
-  through this module.
+- Workbooks are small (a driver-side stdlib xlsx read, or a directory of
+  CSVs). Each xlsx sheet becomes an Arrow-backed ``LocalRelation``
+  (``session.local_frame``), decoded once in the JVM — the heavy data
+  paths (harness parquet) never go through this module.
 - The reference's "first column is the patient-ID index" convention is
   kept: the first column of every sheet is renamed to the per-kind
   patient-ID column (genotype_patient_ID / phenotype_patient_ID /
@@ -22,6 +22,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from p6_spark.schemas import KNOWN_SHEET_ALIASES, PATIENT_ID_COLUMN, RENAME_MAP
+from p6_spark.session import local_frame
 
 
 def normalize_header(name: str) -> str:
@@ -34,13 +35,15 @@ def normalize_header(name: str) -> str:
     return s.lower()
 
 
+def canonical_column(name: str) -> str:
+    """Header normalization + RENAME_MAP."""
+    n = normalize_header(name)
+    return RENAME_MAP.get(n, n)
+
+
 def normalize_columns(df: DataFrame) -> DataFrame:
-    """Apply header normalization + RENAME_MAP to every column."""
-    renamed = []
-    for c in df.columns:
-        n = normalize_header(c)
-        renamed.append(RENAME_MAP.get(n, n))
-    return df.toDF(*renamed)
+    """Apply ``canonical_column`` to every column."""
+    return df.toDF(*[canonical_column(c) for c in df.columns])
 
 
 def promote_patient_id(df: DataFrame, kind: str) -> DataFrame:
@@ -90,14 +93,15 @@ def load_workbook_excel(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     """Excel workbook via the dependency-free stdlib xlsx parser
     (sources/xlsx.py) — same semantics as the reference's
     pd.ExcelFile + read_excel(header=0) per sheet
-    (src/P6/loader.py:30-45) but with no openpyxl requirement. Sheets
-    are small driver-side objects; the distributed path starts after
-    createDataFrame.
+    (src/P6/loader.py:30-45) but with no openpyxl requirement. Each sheet
+    is built from a ``pyarrow.Table`` (``session.local_frame``), so Spark
+    holds it as a ``LocalRelation`` and no action calls a Python worker
+    to read it. Headers are normalized before the frame is built.
 
     Robustness: sheets with no rows at all are skipped; a headed sheet
     with zero data rows becomes an empty DataFrame with an explicit
     all-string schema (never schema inference, which would raise on
-    empty/all-None columns)."""
+    empty/all-None columns); short rows are padded with NULLs."""
     from pyspark.sql import types as T
 
     from p6_spark.sources.xlsx import read_xlsx
@@ -113,11 +117,11 @@ def load_workbook_excel(spark: SparkSession, path: str) -> dict[str, DataFrame]:
         if not header:
             continue
         schema = T.StructType(
-            [T.StructField(c, T.StringType(), True) for c in header]
+            [T.StructField(canonical_column(c), T.StringType(), True) for c in header]
         )
-        data = [tuple(r[: len(header)]) for r in rows[1:]]
-        sdf = spark.createDataFrame(data, schema)
-        out[sheet] = normalize_columns(sdf)
+        width = len(header)
+        data = [tuple(r[:width]) + (None,) * (width - len(r)) for r in rows[1:]]
+        out[sheet] = local_frame(spark, data, schema)
     return out
 
 

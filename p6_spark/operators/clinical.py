@@ -1,7 +1,9 @@
 """Disease / measurement / biosample pipelines — straightforward ports of
 the reference mappers (src/P6/mapper.py:643-756) as declarative flows:
 plan-time required-column check, string hygiene, bool coercion,
-T-normalization of timestamps, float cast with row rejection.
+T-normalization of timestamps, float cast with row rejection. Each sheet
+is one projection with its ``issues`` (audit.with_issues); only the
+measurement value can reject a row.
 """
 
 from __future__ import annotations
@@ -9,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from p6_spark.audit import StageResult, audit_entries, audit_from_rows
+from p6_spark.audit import StageResult, issue, issue_audit, kept, reject_missing, with_issues
 from p6_spark.functions.scalars import normalize_time_like, to_bool
 from p6_spark.loader import promote_patient_id
 from p6_spark.schemas import (
@@ -22,17 +24,13 @@ from p6_spark.schemas import (
 )
 
 
-def _required_check(
-    spark: SparkSession, df: DataFrame, required: set[str], schema, step: str, sheet: str
-) -> StageResult | None:
-    missing = sorted(required - set(df.columns) - {"patient_ID"})
-    # patient_ID arrives via first-column promotion, not by name
-    if missing:
-        audit = audit_entries(
-            spark, [(step, sheet, "error", f"missing required columns: {missing}")]
-        )
-        return StageResult(valid=spark.createDataFrame([], schema), audit=audit)
-    return None
+def _stage(checked: DataFrame, step: str, sheet: str, *records) -> StageResult:
+    """The kept rows of ``checked`` projected to ``records``, and its audit."""
+    return StageResult(
+        valid=kept(checked).select(*records),
+        audit=issue_audit(checked, step, sheet),
+        checked=checked,
+    )
 
 
 def map_disease_table(
@@ -42,14 +40,17 @@ def map_disease_table(
     patient_ID, disease_term, disease_onset, disease_status; optional
     disease_label ('' -> null)."""
     step = "map_disease"
-    bail = _required_check(spark, df, DISEASE_REQUIRED, DISEASE_SCHEMA, step, sheet_name)
+    bail = reject_missing(spark, df, DISEASE_REQUIRED, DISEASE_SCHEMA, step, sheet_name)
     if bail is not None:
         return bail
     df = promote_patient_id(df, "diseases").withColumn("_seq", F.monotonically_increasing_id())
     label = F.trim(F.coalesce(F.col("disease_label").cast("string"), F.lit(""))) if (
         "disease_label" in df.columns
     ) else F.lit("")
-    records = df.select(
+    return _stage(
+        with_issues(df),
+        step,
+        sheet_name,
         "_seq",
         F.col("patient_ID").cast("string").alias("patient_ID"),
         F.trim(F.col("disease_term").cast("string")).alias("disease_term"),
@@ -57,9 +58,6 @@ def map_disease_table(
         F.trim(F.col("disease_onset").cast("string")).alias("disease_onset"),
         to_bool(F.col("disease_status")).alias("disease_status"),
     )
-    from p6_spark.audit import empty_audit
-
-    return StageResult(valid=records, audit=empty_audit(spark))
 
 
 def map_measurement_table(
@@ -69,7 +67,7 @@ def map_measurement_table(
     measurement_value rejects the row; measurement_timestamp optional,
     T-normalized, '' -> null."""
     step = "map_measurement"
-    bail = _required_check(
+    bail = reject_missing(
         spark, df, MEASUREMENT_REQUIRED, MEASUREMENT_SCHEMA, step, sheet_name
     )
     if bail is not None:
@@ -79,12 +77,8 @@ def map_measurement_table(
     )
     value = F.trim(F.col("measurement_value").cast("string")).try_cast("double")
     df = df.withColumn("_value", value)
-    bad = F.col("_value").isNull()
-    audit = audit_from_rows(
-        df,
-        bad,
-        step,
-        sheet_name,
+    rejected = issue(
+        F.col("_value").isNull(),
         "error",
         F.concat(
             F.lit(f"Sheet '{sheet_name}': could not convert measurement_value '"),
@@ -97,7 +91,10 @@ def map_measurement_table(
         if "measurement_timestamp" in df.columns
         else F.lit("")
     )
-    records = df.filter(~bad).select(
+    return _stage(
+        with_issues(df, rejected),
+        step,
+        sheet_name,
         "_seq",
         F.col("patient_ID").cast("string").alias("patient_ID"),
         F.trim(F.col("measurement_type").cast("string")).alias("measurement_type"),
@@ -107,7 +104,6 @@ def map_measurement_table(
             "measurement_timestamp"
         ),
     )
-    return StageResult(valid=records, audit=audit)
 
 
 def map_biosample_table(
@@ -116,17 +112,17 @@ def map_biosample_table(
     """Reference _map_biosample (src/P6/mapper.py:719-756): collection_date
     T-normalized ('' kept as '')."""
     step = "map_biosample"
-    bail = _required_check(spark, df, BIOSAMPLE_REQUIRED, BIOSAMPLE_SCHEMA, step, sheet_name)
+    bail = reject_missing(spark, df, BIOSAMPLE_REQUIRED, BIOSAMPLE_SCHEMA, step, sheet_name)
     if bail is not None:
         return bail
     df = promote_patient_id(df, "biosamples").withColumn("_seq", F.monotonically_increasing_id())
-    records = df.select(
+    return _stage(
+        with_issues(df),
+        step,
+        sheet_name,
         "_seq",
         F.col("patient_ID").cast("string").alias("patient_ID"),
         F.trim(F.col("biosample_id").cast("string")).alias("biosample_id"),
         F.trim(F.col("biosample_type").cast("string")).alias("biosample_type"),
         normalize_time_like(F.col("collection_date")).alias("collection_date"),
     )
-    from p6_spark.audit import empty_audit
-
-    return StageResult(valid=records, audit=empty_audit(spark))

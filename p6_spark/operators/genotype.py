@@ -5,9 +5,9 @@ Mirrors the reference row parser (src/P6/mapper.py:237-311) and the
 Genotype dataclass constraints (src/P6/genotype.py:140-175) as one
 declarative DataFrame flow:
 
-  plan-time column check -> HGVS/raw consistency audit (J3) ->
-  row-level validity predicate (P8) -> dead-letter split ->
-  zip-truncation explode (G1) -> vocab mapping (F9/F10)
+  plan-time column check -> one projection that attaches every row's
+  issues (HGVS/raw consistency J3, row-level validity P8) -> kept rows
+  -> zip-truncation explode (G1) -> vocab mapping (F9/F10)
 
 Reference semantics preserved exactly:
 - ANY invalid zipped token pair, missing chromosome, or constraint
@@ -17,8 +17,8 @@ Reference semantics preserved exactly:
   first, validates inside the loop).
 - Missing email is defaulted BEFORE the email-format constraint.
 
-Everything is Column logic; at 100 TB this is a single codegen'd scan
-with two outputs (records, audit).
+Everything is Column logic; the records and the audit rows are two
+readings of the same projection.
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from p6_spark.audit import StageResult, audit_entries, audit_from_rows, union_audits
+from p6_spark.audit import StageResult, issue, issue_audit, kept, reject_missing, with_issues
 from p6_spark.functions.hgvs import hgvs_g_is_malformed, hgvs_raw_consistent
 from p6_spark.functions.scalars import email_or_default, to_bool
 from p6_spark.loader import promote_patient_id
@@ -34,6 +34,7 @@ from p6_spark.schemas import (
     ALLOWED_CHROM_ENCODINGS,
     EMAIL_PATTERN,
     GENOTYPE_KEY_COLUMNS,
+    GENOTYPE_SCHEMA,
     INHERITANCE_MAP,
     VALID_ID_PATTERN,
     ZYGOSITY_MAP,
@@ -59,14 +60,10 @@ def map_genotype_table(
     strict_variants: bool = False,
 ) -> StageResult:
     step = "map_genotype"
-    missing = sorted(GENOTYPE_KEY_COLUMNS - set(df.columns))
-    if missing:
-        # table-level rejection (reference src/P6/mapper.py:558-563)
-        audit = audit_entries(
-            spark,
-            [(step, sheet_name, "error", f"missing required columns: {missing}")],
-        )
-        return StageResult(valid=spark.createDataFrame([], _empty_schema()), audit=audit)
+    # table-level rejection (reference src/P6/mapper.py:558-563)
+    bail = reject_missing(spark, df, GENOTYPE_KEY_COLUMNS, GENOTYPE_SCHEMA, step, sheet_name)
+    if bail is not None:
+        return bail
 
     df = promote_patient_id(df, "genotype")
     df = df.withColumn("_seq", F.monotonically_increasing_id())
@@ -79,7 +76,6 @@ def map_genotype_table(
     # -> 'Unrecognized ... code' error. Spark nulls model pandas NaN.
     chrom_raw = F.trim(F.coalesce(F.col("chromosome").cast("string"), F.lit("nan")))
     df = df.withColumn("contact_email", email_or_default(F.col("contact_email")))
-    df = df.withColumn("_chrom_missing", chrom_raw == "")
     df = df.withColumn(
         "_chrom",
         F.when(F.lower(chrom_raw).startswith("chr"), chrom_raw).otherwise(
@@ -107,18 +103,15 @@ def map_genotype_table(
     # g. string its [^:]+ pattern cannot parse (every del/dup/ins, and
     # 'nan' from a missing cell) and returns early; only parseable strings
     # reach the mismatch comparison. Neither audit drops the row.
-    malformed = hgvs_g_is_malformed(F.col("hgvsg"))
-    malformed_audit = audit_from_rows(
-        df,
-        malformed,
-        step,
-        sheet_name,
+    malformed = issue(
+        hgvs_g_is_malformed(F.col("hgvsg")),
         "error",
         F.concat(
             F.lit(f"Sheet '{sheet_name}': malformed HGVS g. notation '"),
             F.coalesce(F.trim(F.col("hgvsg").cast("string")), F.lit("nan")),
             F.lit("'"),
         ),
+        drop=False,
     )
     consistent = hgvs_raw_consistent(
         F.col("hgvsg"),
@@ -128,11 +121,8 @@ def map_genotype_table(
         F.col("reference"),
         F.col("alternate"),
     )
-    hgvs_audit = audit_from_rows(
-        df,
+    mismatch = issue(
         ~consistent,
-        step,
-        sheet_name,
         "error" if strict_variants else "warning",
         # reference msg format (src/P6/mapper.py:495-499): raw cell values
         # rendered as-is ('nan' for missing)
@@ -151,6 +141,7 @@ def map_genotype_table(
             F.coalesce(F.col("alternate").cast("string"), F.lit("nan")),
             F.lit(")"),
         ),
+        drop=False,
     )
 
     # --- row-level validity (P6op/P7/P8): replay the reference's per-row
@@ -203,7 +194,7 @@ def map_genotype_table(
 
     fail_reason = (
         F.when(first_bad.isNotNull() & pair0_bad, pair_code_msg)
-        .when(F.col("_chrom_missing"), F.lit("Missing chromosome"))
+        .when(chrom_raw == "", F.lit("Missing chromosome"))
         .when(st_nan.isNotNull(), st_nan)
         .when(st_lit.isNotNull(), st_lit)
         .when(en_nan.isNotNull(), en_nan)
@@ -246,22 +237,22 @@ def map_genotype_table(
         .when(_empty("hgvsp"), F.lit("hgvsp must be a nonempty string"))
         .when(first_bad.isNotNull(), pair_code_msg)
     )
-    df = df.withColumn("_fail", fail_reason)
-    row_audit = audit_from_rows(
-        df,
-        F.col("_fail").isNotNull(),
-        step,
-        sheet_name,
-        "error",
-        F.concat(F.lit(f"Sheet '{sheet_name}': "), F.col("_fail")),
+    checked = with_issues(
+        df.withColumn("_fail", fail_reason),
+        malformed,
+        mismatch,
+        issue(
+            F.col("_fail").isNotNull(),
+            "error",
+            F.concat(F.lit(f"Sheet '{sheet_name}': "), F.col("_fail")),
+        ),
     )
-    ok = df.filter(F.col("_fail").isNull())
 
     # --- explode + vocab map (F9/F10) --------------------------------------
     z_map = F.create_map(*[F.lit(x) for kv in ZYGOSITY_MAP.items() for x in kv])
     i_map = F.create_map(*[F.lit(x) for kv in INHERITANCE_MAP.items() for x in kv])
     records = (
-        ok.select(
+        kept(checked).select(
             "_seq",
             F.coalesce(F.col("genotype_patient_ID").cast("string"), F.lit("nan")).alias(
                 "genotype_patient_ID"
@@ -284,11 +275,5 @@ def map_genotype_table(
         .drop("_pair")
     )
     return StageResult(
-        valid=records, audit=union_audits(malformed_audit, hgvs_audit, row_audit)
+        valid=records, audit=issue_audit(checked, step, sheet_name), checked=checked
     )
-
-
-def _empty_schema():
-    from p6_spark.schemas import GENOTYPE_SCHEMA
-
-    return GENOTYPE_SCHEMA

@@ -4,13 +4,16 @@ Reference builds one protobuf Phenopacket per patient by accumulating
 dicts-of-lists (src/P6/mapper.py:759-821) and serializing with
 MessageToJson. Spark-first this is:
 
-  per-kind groupBy(patient).agg(sort_array(collect_list(struct(...))))
-  -> chained full-outer joins on patient_id -> one nested struct column
+  union of the five record streams, each row carrying its kind's
+  struct -> ONE groupBy(patient).agg(sort_array(collect_list(...)) per
+  kind) -> one nested document per patient
 
-The only shuffles are the five groupBys + the join, all on patient_id —
-co-partitioned by AQE into effectively one exchange. Arrays are sorted by
-the pipelines' _seq column so packet contents are deterministic under any
-partitioning (collect_list alone is order-nondeterministic).
+That is one shuffle for all kinds: the co-group a chain of full-outer
+joins would do, without re-shuffling after each join. Records with a
+NULL patient id group per kind, as unmatched full-outer-join rows would.
+Arrays are sorted by the pipelines' _seq column so packet contents are
+deterministic under any partitioning (collect_list alone is
+order-nondeterministic).
 
 Field names use protobuf-JSON camelCase (phenotypicFeatures,
 progressStatus, ...) so the written JSON matches MessageToJson's shape
@@ -22,19 +25,20 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from p6_spark.functions.hgvs import hgvs_g_normalize
 from p6_spark.functions.scalars import geno_code_for_zygosity
+from p6_spark.session import local_frame
 
-
-def _collect_sorted(df: DataFrame, key: str, struct_col, alias: str) -> DataFrame:
-    return (
-        df.groupBy(F.col(key).alias("patient_id"))
-        .agg(F.sort_array(F.collect_list(struct_col)).alias("_tmp"))
-        .select(
-            "patient_id", F.transform(F.col("_tmp"), lambda s: s["v"]).alias(alias)
-        )
-    )
+# record kind -> the packet array holding one element per valid record
+PACKET_FIELDS = {
+    "phenotype": "phenotypicFeatures",
+    "genotype": "interpretations",
+    "diseases": "diseases",
+    "measurements": "measurements",
+    "biosamples": "biosamples",
+}
 
 
 def assemble_phenopackets(
@@ -45,10 +49,15 @@ def assemble_phenopackets(
     measurements: DataFrame | None = None,
     biosamples: DataFrame | None = None,
 ) -> DataFrame:
-    """Full-outer co-group of the five record streams by patient into one
-    packet row per patient (reference _group_records_by_patient +
+    """Co-group of the five record streams by patient into one packet row
+    per patient (reference _group_records_by_patient +
     construct_phenopacket_for_patient, src/P6/mapper.py:759-910)."""
-    parts: list[DataFrame] = []
+    # field -> (records, patient key, sort-keyed struct to collect,
+    #           sorted collected array -> packet array)
+    parts: dict[str, tuple] = {}
+
+    def values(a):
+        return F.transform(a, lambda s: s["v"])
 
     if phenotypes is not None:
         feat = F.struct(
@@ -58,9 +67,7 @@ def assemble_phenopackets(
                 F.when(~F.col("status"), F.lit(True)).alias("excluded"),
             ).alias("v"),
         )
-        parts.append(
-            _collect_sorted(phenotypes, "phenotype_patient_ID", feat, "phenotypicFeatures")
-        )
+        parts["phenotypicFeatures"] = (phenotypes, "phenotype_patient_ID", feat, values)
 
     if genotypes is not None:
         # Expression carries ONLY {"value": ...}: the reference's
@@ -105,29 +112,25 @@ def assemble_phenopackets(
             F.struct(vd.alias("variationDescriptor")).alias("variantInterpretation"),
         )
         raw = F.struct(F.col("_seq").alias("k"), F.col("_pos").alias("p"), gi.alias("v"))
+
         # interpretation ids are per-patient ordinal: "{pid}-interpretation-{i}"
-        # (reference src/P6/mapper.py:847-849) — posexplode-style index via
-        # the sorted collect + transform-with-index.
-        collected = (
-            genotypes.groupBy(F.col("genotype_patient_ID").alias("patient_id"))
-            .agg(F.sort_array(F.collect_list(raw)).alias("_tmp"))
-            .select(
-                "patient_id",
-                F.transform(
-                    F.col("_tmp"),
-                    lambda s, i: F.struct(
-                        F.concat(
-                            F.col("patient_id"), F.lit("-interpretation-"), i.cast("string")
-                        ).alias("id"),
-                        F.lit("COMPLETED").alias("progressStatus"),
-                        F.struct(F.array(s["v"]).alias("genomicInterpretations")).alias(
-                            "diagnosis"
-                        ),
+        # (reference src/P6/mapper.py:847-849) — the index of the sorted
+        # collect, via transform-with-index.
+        def interpretations(a):
+            return F.transform(
+                a,
+                lambda s, i: F.struct(
+                    F.concat(
+                        F.col("patient_id"), F.lit("-interpretation-"), i.cast("string")
+                    ).alias("id"),
+                    F.lit("COMPLETED").alias("progressStatus"),
+                    F.struct(F.array(s["v"]).alias("genomicInterpretations")).alias(
+                        "diagnosis"
                     ),
-                ).alias("interpretations"),
+                ),
             )
-        )
-        parts.append(collected)
+
+        parts["interpretations"] = (genotypes, "genotype_patient_ID", raw, interpretations)
 
     if diseases is not None:
         d = F.struct(
@@ -138,7 +141,7 @@ def assemble_phenopackets(
                 ).alias("term")
             ).alias("v"),
         )
-        parts.append(_collect_sorted(diseases, "patient_ID", d, "diseases"))
+        parts["diseases"] = (diseases, "patient_ID", d, values)
 
     if measurements is not None:
         m = F.struct(
@@ -147,7 +150,7 @@ def assemble_phenopackets(
                 F.struct(F.col("measurement_type").alias("id")).alias("type")
             ).alias("v"),
         )
-        parts.append(_collect_sorted(measurements, "patient_ID", m, "measurements"))
+        parts["measurements"] = (measurements, "patient_ID", m, values)
 
     if biosamples is not None:
         b = F.struct(
@@ -157,19 +160,33 @@ def assemble_phenopackets(
                 F.struct(F.col("biosample_type").alias("id")).alias("type"),
             ).alias("v"),
         )
-        parts.append(_collect_sorted(biosamples, "patient_ID", b, "biosamples"))
+        parts["biosamples"] = (biosamples, "patient_ID", b, values)
 
     if not parts:
-        return spark.createDataFrame([], "id string")
+        return local_frame(spark, [], T.StructType([T.StructField("id", T.StringType())]))
 
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.join(p, "patient_id", "full_outer")
-
-    return out.select(
+    streams = [
+        df.select(
+            F.col(key).alias("patient_id"),
+            F.when(F.col(key).isNull(), F.lit(name)).alias("_orphan_kind"),
+            rec.alias(name),
+        )
+        for name, (df, key, rec, _) in parts.items()
+    ]
+    stream = streams[0]
+    for other in streams[1:]:
+        stream = stream.unionByName(other, allowMissingColumns=True)
+    grouped = stream.groupBy("patient_id", "_orphan_kind").agg(
+        *[F.sort_array(F.collect_list(name)).alias(name) for name in parts]
+    )
+    # a patient without records of a kind has no such array, as in proto3
+    return grouped.select(
         F.col("patient_id").alias("id"),
         F.struct(F.col("patient_id").alias("id")).alias("subject"),
-        *[c for c in out.columns if c != "patient_id"],
+        *[
+            F.when(F.size(name) > 0, finish(F.col(name))).alias(name)
+            for name, (_, _, _, finish) in parts.items()
+        ],
     )
 
 
@@ -182,16 +199,18 @@ def write_packets_json(packets: DataFrame, out_dir: str) -> None:
 
 def write_packet_files(packets: DataFrame, out_dir: str) -> int:
     """Driver-side per-patient numbered files mirroring the reference CLI
-    (phenopacket_0.json, ...). Fine for workbook-sized data; use
-    write_packets_json at scale."""
+    (phenopacket_0.json, ...). One DataFrame ``collect`` of the packets'
+    JSON: a single action, which also fills the observations on
+    ``packets`` (``MappingResult.stats``). Not the RDD of ``toJSON()``:
+    collecting it filled them with zero counts on a CSV workbook, and its
+    ``toLocalIterator`` runs one job per partition. Fine for
+    workbook-sized data; use write_packets_json at scale."""
     import json
     import os
 
     os.makedirs(out_dir, exist_ok=True)
-    n = 0
-    for row in packets.toJSON().toLocalIterator():
-        doc = json.loads(row)
+    docs = packets.select(F.to_json(F.struct("*"))).collect()
+    for n, (doc,) in enumerate(docs):
         with open(os.path.join(out_dir, f"phenopacket_{n}.json"), "w") as f:
-            json.dump(doc, f, indent=2)
-        n += 1
-    return n
+            json.dump(json.loads(doc), f, indent=2)
+    return len(docs)

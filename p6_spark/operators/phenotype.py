@@ -4,15 +4,17 @@ records + audit rows, with ontology validation as broadcast joins.
 Mirrors the reference row parser (src/P6/mapper.py:313-399) and the
 Phenotype dataclass constraints (src/P6/phenotype.py:33-54):
 
-  plan-time column check -> NAD filter (P4, warn) -> HPO cell regex
-  parse (F5, unparseable -> error) -> CURIE zero-pad (F6) -> time
-  normalize (F1) -> bool coercion (F2) -> constraint predicate (P8) ->
-  ontology broadcast joins (J2: existence/obsolescence/label-match
-  warnings) -> batch validators (A5: phenotypic-abnormality lineage,
-  annotation propagation) as joins over the ancestors array.
+  plan-time column check -> HPO cell regex parse (F5) + CURIE zero-pad
+  (F6) + time normalize (F1) + bool coercion (F2) -> one broadcast left
+  join to the ontology -> one projection that attaches every row's
+  issues: NAD skip (P4, warn), unparseable cell (error), constraints
+  (P8, error), ontology existence/obsolescence/label match (J2, warn)
+  and phenotypic-abnormality lineage (A5, warn) -> kept rows.
 
-Per-row ontology WARNINGS are produced from join results (row-correlated
-audit rows), never from UDF side effects — Spark accumulators are not
+Annotation propagation (A5) is the one cross-row check: the kept rows'
+(term, ancestor) pairs semi-joined to the sheet's terms. Per-row
+ontology WARNINGS are produced from join results (row-correlated audit
+rows), never from UDF side effects — Spark accumulators are not
 exactly-once (SURVEY §7 fidelity trap).
 """
 
@@ -21,13 +23,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from p6_spark.audit import StageResult, audit_entries, audit_from_rows, union_audits
+from p6_spark.audit import (
+    StageResult,
+    issue,
+    issue_audit,
+    kept,
+    reject_missing,
+    union_audits,
+    with_issues,
+)
 from p6_spark.functions.hpo import hpo_curie, hpo_label, is_nad
 from p6_spark.functions.scalars import normalize_time_like, to_bool
 from p6_spark.loader import promote_patient_id
 from p6_spark.schemas import (
     HPO_ID_PATTERN,
     PHENOTYPE_KEY_COLUMNS,
+    PHENOTYPE_SCHEMA,
     TIMESTAMP_PATTERN,
     VALID_ID_PATTERN,
 )
@@ -41,192 +52,161 @@ def map_phenotype_table(
     ontology: DataFrame | None = None,
 ) -> StageResult:
     step = "map_phenotype"
-    missing = sorted(PHENOTYPE_KEY_COLUMNS - set(df.columns))
-    if missing:
-        from p6_spark.schemas import PHENOTYPE_SCHEMA
+    bail = reject_missing(spark, df, PHENOTYPE_KEY_COLUMNS, PHENOTYPE_SCHEMA, step, sheet_name)
+    if bail is not None:
+        return bail
 
-        audit = audit_entries(
-            spark, [(step, sheet_name, "error", f"missing required columns: {missing}")]
-        )
-        return StageResult(valid=spark.createDataFrame([], PHENOTYPE_SCHEMA), audit=audit)
-
-    df = promote_patient_id(df, "phenotype")
-    df = df.withColumn("_seq", F.monotonically_increasing_id())
-
-    # P4: NAD placeholder -> skip row with warning (src/P6/mapper.py:330-334)
-    nad = is_nad(F.col("hpo_id"))
-    nad_audit = audit_from_rows(
-        df,
-        nad,
-        step,
-        sheet_name,
-        "warning",
-        # en dash, byte-exact with src/P6/mapper.py:331-333
-        F.lit(f"Sheet '{sheet_name}': 'NAD' encountered – skipping phenotype row"),
-    )
-    df = df.filter(~nad)
-
-    # F5/F6: parse label + digits, zero-pad CURIE
-    df = (
-        df.withColumn("_label", hpo_label(F.col("hpo_id")))
-        .withColumn("_curie", hpo_curie(F.col("hpo_id")))
-        .withColumn("_date", normalize_time_like(F.col("date_of_observation")))
-        .withColumn("_status", to_bool(F.col("status")))
-    )
-    unparseable = F.col("_curie").isNull()
-    parse_audit = audit_from_rows(
-        df,
-        unparseable,
-        step,
-        sheet_name,
-        "error",
+    cell = F.col("hpo_id")
+    df = promote_patient_id(df, "phenotype").select(
+        F.monotonically_increasing_id().alias("_seq"),
         # str(NaN) == 'nan' is what the reference formats for missing cells
-        F.concat(
-            F.lit(f"Sheet '{sheet_name}': Cannot parse HPO term+ID from '"),
-            F.coalesce(F.trim(F.col("hpo_id").cast("string")), F.lit("nan")),
-            F.lit("'"),
+        F.coalesce(F.col("phenotype_patient_ID").cast("string"), F.lit("nan")).alias(
+            "phenotype_patient_ID"
         ),
+        F.coalesce(F.trim(cell.cast("string")), F.lit("nan")).alias("_cell"),
+        # a blank cell is not NAD: it is unparseable, like 'nan' in the reference
+        F.coalesce(is_nad(cell), F.lit(False)).alias("_nad"),
+        hpo_label(cell).alias("raw_label"),
+        hpo_curie(cell).alias("hpo_id"),
+        normalize_time_like(F.col("date_of_observation")).alias("date_of_observation"),
+        to_bool(F.col("status")).alias("status"),
     )
-    df = df.filter(~unparseable)
 
-    # P8: dataclass constraints (src/P6/phenotype.py:33-54)
-    # Phenotype.__post_init__ messages with the offending value, in check
-    # order (src/P6/phenotype.py:33-54)
-    pid_str = F.coalesce(F.col("phenotype_patient_ID").cast("string"), F.lit("nan"))
+    # P8: Phenotype.__post_init__ messages with the offending value, in
+    # check order (src/P6/phenotype.py:33-54)
+    pid = F.col("phenotype_patient_ID")
     fail = (
         F.when(
             # str(NaN) == 'nan' matches _VALID_ID in the reference
             # (src/P6/mapper.py:367), so a missing ID is bug-compatibly
             # valid and keys a 'nan' record.
-            ~pid_str.rlike(VALID_ID_PATTERN),
-            F.concat(F.lit("Invalid patient ID: '"), pid_str, F.lit("'")),
+            ~pid.rlike(VALID_ID_PATTERN),
+            F.concat(F.lit("Invalid patient ID: '"), pid, F.lit("'")),
         )
         .when(
-            ~F.col("_curie").rlike(HPO_ID_PATTERN),
-            F.concat(F.lit("Invalid HPO ID: '"), F.col("_curie"), F.lit("'")),
+            ~F.col("hpo_id").rlike(HPO_ID_PATTERN),
+            F.concat(F.lit("Invalid HPO ID: '"), F.col("hpo_id"), F.lit("'")),
         )
         .when(
-            ~F.col("_date").rlike(TIMESTAMP_PATTERN),
+            ~F.col("date_of_observation").rlike(TIMESTAMP_PATTERN),
             F.concat(
-                F.lit("Invalid date_of_observation: '"), F.col("_date"), F.lit("'")
+                F.lit("Invalid date_of_observation: '"),
+                F.col("date_of_observation"),
+                F.lit("'"),
             ),
         )
     )
     df = df.withColumn("_fail", fail)
-    constraint_audit = audit_from_rows(
-        df,
-        F.col("_fail").isNotNull(),
-        step,
-        sheet_name,
-        "error",
-        F.concat(F.lit(f"Sheet '{sheet_name}': "), F.col("_fail")),
-    )
-    ok = df.filter(F.col("_fail").isNull())
-
-    records = ok.select(
-        "_seq",
-        F.coalesce(F.col("phenotype_patient_ID").cast("string"), F.lit("nan")).alias(
-            "phenotype_patient_ID"
+    prefix = F.lit(f"Sheet '{sheet_name}': ")
+    nad, parsed = F.col("_nad"), F.col("hpo_id").isNotNull()
+    issues = [
+        # P4: NAD placeholder -> skip row with warning (src/P6/mapper.py:330-334),
+        # en dash, byte-exact with src/P6/mapper.py:331-333
+        issue(
+            nad,
+            "warning",
+            F.lit(f"Sheet '{sheet_name}': 'NAD' encountered – skipping phenotype row"),
+            drop=True,
         ),
-        F.col("_curie").alias("hpo_id"),
-        F.col("_label").alias("raw_label"),
-        F.col("_date").alias("date_of_observation"),
-        F.col("_status").alias("status"),
-    )
-
-    audits = [nad_audit, parse_audit, constraint_audit]
-
+        issue(
+            ~nad & ~parsed,
+            "error",
+            F.concat(
+                prefix, F.lit("Cannot parse HPO term+ID from '"), F.col("_cell"), F.lit("'")
+            ),
+        ),
+        issue(
+            ~nad & parsed & F.col("_fail").isNotNull(),
+            "error",
+            F.concat(prefix, F.col("_fail")),
+        ),
+    ]
     if ontology is not None:
-        audits.append(_ontology_audit(records, ontology, step, sheet_name))
-        audits.append(_propagation_audit(records, ontology, step, sheet_name))
+        df = df.join(F.broadcast(ontology), F.col("hpo_id") == F.col("term_id"), "left")
+        issues += _ontology_issues(~nad & parsed & F.col("_fail").isNull(), prefix)
 
-    return StageResult(
-        valid=records.drop("raw_label"), audit=union_audits(*audits)
+    checked = with_issues(df, *issues)
+    records = kept(checked)
+    audit = issue_audit(checked, step, sheet_name)
+    if ontology is not None:
+        audit = union_audits(audit, _propagation_audit(records, step, sheet_name))
+    valid = records.select(
+        "_seq", "phenotype_patient_ID", "hpo_id", "date_of_observation", "status"
     )
+    return StageResult(valid=valid, audit=audit, checked=checked)
 
 
-def _ontology_audit(
-    records: DataFrame, ontology: DataFrame, step: str, sheet_name: str
-) -> DataFrame:
-    """J2 + A5 per-term checks as ONE broadcast left join: existence,
+def _ontology_issues(ok, prefix) -> list:
+    """J2 + A5 per-term checks on the ontology columns the left join
+    attached, for rows that passed every other check: existence,
     obsolescence (with replacement suggestions), label match, and
     phenotypic-abnormality lineage (src/P6/mapper.py:380-397,426-440)."""
-    terms = F.broadcast(ontology)
-    j = records.join(terms, records.hpo_id == terms.term_id, "left")
-    msg_prefix = F.lit(f"Sheet '{sheet_name}': ")
-    checks = [
-        (
-            F.col("term_id").isNull(),
-            F.concat(msg_prefix, F.lit("HPO ID '"), F.col("hpo_id"), F.lit("' not found in ontology")),
+    found = ok & F.col("term_id").isNotNull()
+    name = F.coalesce(F.col("name"), F.lit(""))
+    hpo_id = F.col("hpo_id")
+    return [
+        issue(
+            ok & F.col("term_id").isNull(),
+            "warning",
+            F.concat(prefix, F.lit("HPO ID '"), hpo_id, F.lit("' not found in ontology")),
         ),
-        (
-            F.col("term_id").isNotNull() & F.col("is_obsolete"),
+        issue(
+            found & F.col("is_obsolete"),
+            "warning",
             F.concat(
-                msg_prefix,
+                prefix,
                 F.lit("'"),
-                F.col("hpo_id"),
+                hpo_id,
                 F.lit("' is obsolete; use "),
                 F.coalesce(F.array_join(F.col("alt_term_ids"), ", "), F.lit("")),
             ),
         ),
-        (
-            F.col("term_id").isNotNull()
+        issue(
+            found
             & (F.col("raw_label") != "")
-            & (F.lower(F.col("raw_label")) != F.lower(F.coalesce(F.col("name"), F.lit("")))),
+            & (F.lower(F.col("raw_label")) != F.lower(name)),
+            "warning",
             F.concat(
-                msg_prefix,
+                prefix,
                 F.lit("label '"),
                 F.col("raw_label"),
                 F.lit("' does not match ontology name '"),
-                F.coalesce(F.col("name"), F.lit("")),
+                name,
                 F.lit("'"),
             ),
         ),
-        (
-            F.col("term_id").isNotNull()
+        issue(
+            found
             & ~F.col("is_obsolete")
             & ~F.array_contains(
                 F.coalesce(F.col("ancestors"), F.array()), PHENOTYPIC_ABNORMALITY_ROOT
             ),
+            "warning",
             F.concat(
-                msg_prefix,
+                prefix,
                 F.lit("'"),
-                F.col("hpo_id"),
+                hpo_id,
                 F.lit("' is not a descendant of phenotypic abnormality"),
             ),
         ),
     ]
-    parts = [
-        j.filter(cond).select(
-            F.lit(step).alias("step"),
-            F.lit(sheet_name).alias("sheet"),
-            F.lit("warning").alias("level"),
-            msg.cast("string").alias("message"),
-        )
-        for cond, msg in checks
-    ]
-    return union_audits(*parts)
 
 
-def _propagation_audit(
-    records: DataFrame, ontology: DataFrame, step: str, sheet_name: str
-) -> DataFrame:
+def _propagation_audit(records: DataFrame, step: str, sheet_name: str) -> DataFrame:
     """A5 annotation-propagation check: two terms in the same sheet where
-    one is an ancestor of the other -> redundancy warning. Join of the
-    sheet's distinct terms against the exploded ancestor closure — no
-    pairwise O(n^2) over rows, only over the sheet's distinct term set."""
-    sheet_terms = records.select("hpo_id").distinct()
-    anc = (
-        F.broadcast(ontology)
-        .join(sheet_terms, F.col("term_id") == sheet_terms.hpo_id, "left_semi")
-        .select(F.col("term_id"), F.explode(F.coalesce(F.col("ancestors"), F.array())).alias("anc"))
+    one is an ancestor of the other -> redundancy warning. The kept rows'
+    (term, ancestor) pairs, from the ancestors their ontology join
+    attached, semi-joined to the broadcast sheet terms and made distinct
+    — no pairwise O(n^2) over rows, and no second ontology join."""
+    present = F.broadcast(records.select(F.col("hpo_id").alias("present_anc")))
+    pairs = (
+        records.select(
+            F.col("hpo_id").alias("term_id"), F.explode("ancestors").alias("present_anc")
+        )
+        .join(present, "present_anc", "left_semi")
+        .distinct()
     )
-    redundant = anc.join(
-        sheet_terms.select(F.col("hpo_id").alias("present_anc")),
-        anc.anc == F.col("present_anc"),
-        "inner",
-    )
-    return redundant.select(
+    return pairs.select(
         F.lit(step).alias("step"),
         F.lit(sheet_name).alias("sheet"),
         F.lit("warning").alias("level"),

@@ -30,7 +30,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Spark's hardware-provisioning guidance: at most 75 % of memory to Spark.
 SPARK_MEMORY_FRACTION = 0.75
@@ -148,3 +149,21 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """A driver-side list of tuples as a DataFrame built from a
+    ``pyarrow.Table``. Spark decodes the Arrow batches in the JVM into a
+    ``LocalRelation`` (under ``spark.sql.execution.arrow.localRelationThreshold``,
+    48 MB by default), so no action ever starts a Python worker to read it,
+    unlike ``createDataFrame`` of a list, a pickled ``parallelize`` that
+    every action replays. An empty list gives an empty ``LocalRelation``,
+    which the optimizer prunes."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    if not rows:
+        return spark.createDataFrame(arrow_schema.empty_table(), schema)
+    columns = [pa.array(c, type=f.type) for c, f in zip(zip(*rows), arrow_schema)]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow_schema), schema)

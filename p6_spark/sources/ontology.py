@@ -4,15 +4,20 @@ ontology check becomes a broadcast join instead of a per-row Python
 callback (reference: hpotk MinimalOntology loaded once and consulted
 row-by-row, src/P6/mapper.py:380-397,426-440).
 
-At scale the term table is tiny (~18k HPO terms) and broadcasts to every
-executor once; validation of a 100 TB phenotype stream is then a
-map-side hash join — no Python, no network.
+Every loader builds the table from a ``pyarrow.Table``
+(``session.local_frame``): Spark decodes it once, in the JVM, into a
+``LocalRelation``, so no action replays a Python ``parallelize`` to read
+it. The table is tiny (~19k HPO terms) and broadcasts to every executor
+once; validation of a phenotype stream is then a map-side hash join — no
+Python, no network.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from p6_spark.session import local_frame
 
 PHENOTYPIC_ABNORMALITY_ROOT = "HP:0000118"
 
@@ -29,7 +34,7 @@ ONTOLOGY_SCHEMA = T.StructType(
 
 def ontology_from_records(spark: SparkSession, records: list[tuple]) -> DataFrame:
     """Build the term table from plain tuples (tests / fixtures)."""
-    return spark.createDataFrame(records, ONTOLOGY_SCHEMA)
+    return local_frame(spark, records, ONTOLOGY_SCHEMA)
 
 
 def ontology_from_obographs(spark: SparkSession, path: str) -> DataFrame:
@@ -43,7 +48,8 @@ def ontology_from_obographs(spark: SparkSession, path: str) -> DataFrame:
     surfaces as ``term.alt_term_ids``), and ancestors as the transitive
     closure of ``is_a`` edges (proper ancestors, self excluded — hpotk
     ``graph.get_ancestors`` semantics). Driver-side one-time load; the
-    resulting ~19k-row table broadcasts."""
+    resulting ~19k-row table is an Arrow-backed ``LocalRelation`` that
+    broadcasts."""
     import gzip
     import json
 
@@ -99,7 +105,7 @@ def ontology_from_obographs(spark: SparkSession, path: str) -> DataFrame:
         (tid, name, obsolete, alt, sorted(ancestors(tid)))
         for tid, (name, obsolete, alt) in terms.items()
     ]
-    return spark.createDataFrame(rows, ONTOLOGY_SCHEMA)
+    return local_frame(spark, rows, ONTOLOGY_SCHEMA)
 
 
 def ontology_from_hpotk(spark: SparkSession, path: str) -> DataFrame:
@@ -120,4 +126,4 @@ def ontology_from_hpotk(spark: SparkSession, path: str) -> DataFrame:
         ancestors = [a.value for a in onto.graph.get_ancestors(term.identifier)]
         alt = [a.value for a in term.alt_term_ids]
         rows.append((tid, term.name, bool(term.is_obsolete), alt, ancestors))
-    return spark.createDataFrame(rows, ONTOLOGY_SCHEMA)
+    return local_frame(spark, rows, ONTOLOGY_SCHEMA)

@@ -96,12 +96,15 @@ def test_measure_sentinel_times_the_calibration_query(spark):
 
 def test_bench_artifact_carries_sentinel(tmp_path):
     """End-to-end: a 2-query bench run at sf0.001 writes the sentinel
-    record into its artifact (fresh JVM subprocess, ~40 s)."""
+    record into its artifact (fresh JVM subprocess, ~40 s). The
+    subprocess pins a 1g heap: it runs while the suite's JVM is alive,
+    and two JVMs at the machine-derived default heap do not fit."""
     out = tmp_path / "bench_sentinel.json"
     env = dict(
         os.environ,
         SPARK_GRAFT_SF_DIR=SF,
         SPARK_GRAFT_BENCH_QUERIES="q01_pricing_summary,q06_revenue_filter",
+        P6_SPARK_DRIVER_MEM="1g",
     )
     r = subprocess.run(
         [sys.executable, "bench.py", "--runs", "1", "--out", str(out)],
