@@ -277,37 +277,3 @@ def word_shingles(text: Column, n: int = 3) -> Column:
         ).otherwise(F.array(F.concat_ws(" ", toks)))
 
     return F.element_at(F.transform(F.array(tokens(text)), shingle), 1)
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact n-gram-shingle Jaccard for every pair sharing >= 1 shingle.
-    |A ∩ B| from a self-join on distinct shingles; |A ∪ B| = |A|+|B|-∩.
-    At scale this runs AFTER LSH banding has cut the candidate set."""
-    sh = df.select(
-        F.col(id_col), F.explode(F.array_distinct(word_shingles(F.col(text_col), n))).alias("sh")
-    )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        sh.alias("a")
-        .join(sh.alias("b"), (F.col("a.sh") == F.col("b.sh")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_sh", "n_a")
-    sb = sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_sh", "n_b")
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "n_common", "jaccard")
-    )

@@ -16,8 +16,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from p6_spark.operators.text import md5_int
-
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -76,16 +74,6 @@ def brute_force_topk(
         .filter(F.col("rnk") <= k)
         .orderBy("query_id", "rnk")
     )
-
-
-def hyperplane_sign(plane: int, dim_index: Column, table: int = 0) -> Column:
-    """Deterministic ±1 component of pseudo-random hyperplane `plane` of
-    LSH table `table` at dimension `dim_index` (md5 parity —
-    reproducible in any engine)."""
-    h = md5_int(
-        F.concat(F.lit(f"t{table}_plane{plane}_"), dim_index.cast("string"))
-    )
-    return F.when(h % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
 
 
 def _plane_signs(plane: int, table: int, dims: int = 256) -> list[float]:

@@ -13,7 +13,7 @@ default driver ``memoryOverheadFactor`` of 0.10, so the heap is
 quarter is headroom for the OS and the Python workers. It does not hold a
 second JVM at the same default: two such JVMs have heap ceilings of about
 ``1.36 * M`` together, so a second JVM started while the first is alive
-(a ``bench.py`` subprocess, say) fits only when it pins a small heap with
+(a ``perfbench`` client, say) fits only when it pins a small heap with
 ``P6_SPARK_DRIVER_MEM``. A fixed heap larger than ``M`` lets G1 grow the
 JVM until the kernel kills it. ``P6_SPARK_DRIVER_MEM`` overrides the
 default with any JVM size string (``1g``, ``512m``).
@@ -104,6 +104,11 @@ def driver_memory() -> str:
     return os.environ.get("P6_SPARK_DRIVER_MEM") or default_driver_memory()
 
 
+def parallelism() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "p6_spark",
     cpus: int | None = None,
@@ -111,7 +116,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the tuned session.
 
-    ``SPARK_GRAFT_CPUS`` overrides parallelism (harness contract).
+    ``cpus`` defaults to ``parallelism()``: ``SPARK_GRAFT_CPUS`` if set,
+    else the CPUs this process may run on. It sets both ``local[N]`` and
+    the shuffle partitions.
     ``spark.driver.memory`` is ``driver_memory()``: ``P6_SPARK_DRIVER_MEM``
     if set, else ``0.75 * M / 1.1`` of the machine's memory ``M`` (the
     smaller of physical memory and the cgroup limit), which leaves a
@@ -120,11 +127,11 @@ def get_spark(
     module docstring. The heap is fixed when the JVM starts, so it only
     applies when this call creates the first session of the process.
     ``extra_conf`` overlays builder configs (measurement harnesses, e.g.
-    the memory profiler re-enabling the UI for its stage-metrics REST
+    perfbench's traced run re-enabling the UI for its stage-metrics REST
     API) — only effective when this call CREATES the session.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = parallelism()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -13,7 +13,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_partitioned(
@@ -49,11 +49,6 @@ def write_bucketed(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table)
-
-
-def bucketed_join_ready(spark: SparkSession, left: str, right: str):
-    """Convenience: read two bucketed tables for a co-located join."""
-    return spark.table(left), spark.table(right)
 
 
 def compact(

@@ -31,10 +31,6 @@ HARNESS_TABLES = (
 BROADCAST_DIMS = ("region", "nation")
 
 
-def default_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def normalize_event_ts(df: DataFrame) -> DataFrame:
     """The ONE nanos->timestamp conversion for the events table — both the
     batch loader and the streaming reader (streaming/events.py) funnel

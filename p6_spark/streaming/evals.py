@@ -203,14 +203,6 @@ RANKED_TS_SCHEMA = T.StructType(
 )
 
 
-def read_ranked_ts_stream(spark, path: str) -> DataFrame:
-    """Timestamped ranked-results stream for the TTL'd ledger: the
-    serving system stamps each scored result row with its event time."""
-    return (
-        spark.readStream.schema(RANKED_TS_SCHEMA).format("parquet").load(path)
-    )
-
-
 def retrieval_ledger_stream_ttl(
     ranked_ts: DataFrame,
     window: str = "10 minutes",

@@ -51,7 +51,7 @@ def main() -> None:
 
     from p6_spark.operators.similarity import lsh_candidate_vec_pairs
 
-    spark = get_spark("pair_growth", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("pair_growth")
     spark.sparkContext.setLogLevel("ERROR")
 
     results = []

@@ -25,13 +25,54 @@ import time
 sys.path.insert(0, ".")
 sys.path.insert(0, "tests")
 
+# Load canary: a fixed cheap calibration query, timed at quartile
+# checkpoints DURING the sweep. Its cost is workload-independent, so a
+# max/min ratio beyond _SENTINEL_THRESHOLD means the box got noisy
+# mid-run and the artifact flags itself "noisy": rerun on a quiet
+# machine instead of trusting its per-query seconds.
+_SENTINEL_QUERY = "q06_revenue_filter"  # one filter-aggregate, ~0.15 s at sf0.1
+_SENTINEL_THRESHOLD = 1.2
+
+
+def measure_sentinel(spark, qs, sf_dir: str, runs: int = 3) -> float:
+    """Min-of-N timing of the fixed calibration query, gc-drained,
+    after ONE untimed self-warm run. Without the self-warm, a sample
+    taken soon after session creation pays codegen + parquet listing +
+    JVM JIT (and, in back-to-back sweep queues, the previous JVM's
+    ~30 s forced-shutdown burn) in its first timed run, reads high and
+    flags an idle box as noisy (observed 1.9-6.2x phantom drift)."""
+    qs[_SENTINEL_QUERY](spark, sf_dir).collect()
+    spark._jvm.System.gc()
+    best = float("inf")
+    for _ in range(max(1, runs)):
+        t0 = time.perf_counter()
+        qs[_SENTINEL_QUERY](spark, sf_dir).collect()
+        best = min(best, time.perf_counter() - t0)
+    return round(best, 4)
+
+
+def sentinel_samples_verdict(samples: list[float],
+                             threshold: float = _SENTINEL_THRESHOLD) -> dict:
+    """Drift verdict over equal-warmth checkpoint samples. The samples
+    are all taken DURING the sweep: a fresh-session pre-measurement is
+    structurally ~2.5x colder than a post-sweep one (JVM-wide JIT
+    warmth from 300+ queries — q06 self-warmed standalone converges to
+    ~0.27 s where the post-sweep session reads ~0.11 s), so a pre/post
+    pair flags IDLE boxes as noisy. Pure, so testable."""
+    ratio = max(samples) / max(min(samples), 1e-9)
+    return {
+        "query": _SENTINEL_QUERY,
+        "samples_sec": [round(s, 4) for s in samples],
+        "drift_ratio": round(ratio, 4),
+        "noisy": ratio > threshold,
+    }
+
 
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--doc", default="")
-    ap.add_argument("--cpus", type=int, default=8)
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
@@ -39,24 +80,19 @@ def main() -> int:
 
     from oracle_utils import compare, run_oracle
     from p6_spark.plans.registry import QUERIES, _load_all
-    from p6_spark.session import driver_memory
+    from p6_spark.session import driver_memory, parallelism
 
     _load_all()
+    cpus = parallelism()
     spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .config("spark.sql.shuffle.partitions", str(args.cpus))
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", driver_memory())
         .appName("registry_sweep")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    from bench import (
-        _SENTINEL_QUERY,
-        measure_sentinel,
-        sentinel_samples_verdict,
-    )
 
     names = args.names or list(QUERIES)
     out: dict = {
@@ -66,15 +102,8 @@ def main() -> int:
         "n_green": 0,
         "queries": {},
     }
-    # load canary (VERDICT r10 item 6): calibration timing sampled at
-    # quartile checkpoints DURING the sweep — a noisy flag means the
-    # box load changed mid-sweep and per-query seconds in this
-    # artifact are not comparable across runs. A fresh-session PRE
-    # measurement is structurally JIT-cold vs a post-sweep one and
-    # flags idle boxes (the first five r11 panels, all pre~2.5x post
-    # uniformly — the bias signature; real load would vary), so all
-    # samples are taken at equal warmth instead (sentinel_samples_
-    # verdict docstring has the measured numbers).
+    # load canary: calibration timing sampled at quartile checkpoints,
+    # all at equal warmth (sentinel_samples_verdict has the numbers)
     builders = {n: q.build for n, q in QUERIES.items()}
     checkpoints = sorted({max(1, len(names) * k // 4) for k in (1, 2, 3, 4)})
     sentinel_samples: list[float] = []

@@ -104,9 +104,7 @@ def run_churn(chunks: int, keys: int, spark=None) -> dict:
 
     own_spark = spark is None
     if own_spark:
-        spark = get_spark(
-            "stream_ttl_r10", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
-        )
+        spark = get_spark("stream_ttl_r10")
         spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set(
         "spark.sql.streaming.numRecentProgressUpdates", str(chunks + 64)

@@ -15,7 +15,7 @@ SF_MED = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("p6_spark_tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    s = get_spark("p6_spark_tests")
     yield s
 
 

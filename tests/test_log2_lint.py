@@ -21,7 +21,6 @@ import pathlib
 
 SRC = pathlib.Path(__file__).resolve().parents[1] / "p6_spark"
 ENTRY = pathlib.Path(__file__).resolve().parents[1] / "__spark_entry__.py"
-BENCH = pathlib.Path(__file__).resolve().parents[1] / "bench.py"
 
 _SPARK_SQL_FUNCS = {"expr", "selectExpr", "sql"}
 
@@ -41,7 +40,7 @@ def _spark_sql_strings(tree: ast.AST):
 
 def test_no_spark_side_log2():
     offenders = []
-    files = list(SRC.rglob("*.py")) + [ENTRY, BENCH]
+    files = list(SRC.rglob("*.py")) + [ENTRY]
     for path in files:
         tree = ast.parse(path.read_text())
         for node in ast.walk(tree):

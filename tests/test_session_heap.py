@@ -1,12 +1,16 @@
-"""The default driver heap fits the machine: it never exceeds physical
-memory or the cgroup memory limit, and ``P6_SPARK_DRIVER_MEM`` still
-overrides it. A fixed heap larger than the machine (the old 48g default on
-a 15.7 GB box) lets G1 grow the JVM until the kernel kills it, and every
-later Spark test then fails with ConnectionRefused."""
+"""The session defaults fit the machine. The default driver heap never
+exceeds physical memory or the cgroup memory limit, and
+``P6_SPARK_DRIVER_MEM`` still overrides it. A fixed heap larger than the
+machine (the old 48g default on a 15.7 GB box) lets G1 grow the JVM until
+the kernel kills it, and every later Spark test then fails with
+ConnectionRefused. The default parallelism is the CPUs the process may run
+on, not a constant (the old ``local[32]`` on a 4-core box), and
+``SPARK_GRAFT_CPUS`` still overrides it."""
 
 from __future__ import annotations
 
 import os
+from types import SimpleNamespace
 
 import pytest
 
@@ -99,9 +103,46 @@ def test_env_override(monkeypatch):
 
 
 def test_live_session_uses_derived_heap(spark):
-    """The session get_spark built carries driver_memory(), and the JVM's
-    real max heap fits in the machine's memory."""
+    """The session get_spark built carries driver_memory() and the
+    default parallelism, and the JVM's real max heap fits in the
+    machine's memory."""
     assert spark.sparkContext.getConf().get("spark.driver.memory") == session.driver_memory()
+    assert spark.sparkContext.master == f"local[{session.parallelism()}]"
     max_heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
     if not os.environ.get("P6_SPARK_DRIVER_MEM"):
         assert max_heap <= session.machine_memory_bytes()
+
+
+class _FakeBuilder:
+    """Records what ``get_spark`` asks of ``SparkSession.builder``
+    without starting a JVM."""
+
+    def __init__(self):
+        self.conf: dict[str, str] = {}
+
+    def master(self, m):
+        return self.config("master", m)
+
+    def appName(self, _name):
+        return self
+
+    def config(self, k, v):
+        self.conf[k] = v
+        return self
+
+    def getOrCreate(self):
+        return SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda _level: None))
+
+
+def test_default_parallelism_is_the_cpus_the_process_may_use(monkeypatch):
+    builder = _FakeBuilder()
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=builder))
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    session.get_spark("parallelism_probe")
+    assert builder.conf["master"] == "local[3]"
+    assert builder.conf["spark.sql.shuffle.partitions"] == "3"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    session.get_spark("parallelism_probe")
+    assert builder.conf["master"] == "local[2]"
+    assert builder.conf["spark.sql.shuffle.partitions"] == "2"
