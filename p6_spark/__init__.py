@@ -5,8 +5,9 @@ re-expressed Spark-first.
 Layout:
   session     — tuned SparkSession builder (AQE, Arrow, UTC, shuffle sizing)
   schemas     — explicit StructTypes for the five clinical sheet kinds
-  loader      — header normalization + rename map + Excel/CSV/Parquet sources
-  audit       — the error-channel-as-data pattern (valid/invalid row split)
+  loader      — header normalization + rename map + xlsx/CSV workbook sources
+  audit       — the error-channel-as-data pattern (one ``issues`` projection
+                per sheet: kept rows, and audit rows exploded from it)
   functions/  — native Column expressions for every reference scalar op
   operators/  — genotype/phenotype/clinical pipelines, packet assembly,
                 dedup, similarity search, text analysis, multimodal plumbing

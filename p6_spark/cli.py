@@ -20,24 +20,17 @@ import os
 import sys
 
 
-def _build_session():
-    from p6_spark.session import get_spark
-
-    return get_spark("p6x")
-
-
 def cmd_parse_excel(args: argparse.Namespace) -> int:
     from p6_spark.loader import load_workbook
     from p6_spark.mapper import apply_mapping
     from p6_spark.operators.packet import write_packet_files
+    from p6_spark.session import get_spark
 
-    spark = _build_session()
+    spark = get_spark("p6x")
     tables = load_workbook(spark, args.workbook)
 
     ontology = None
     if args.hpo:
-        # stdlib obographs parser — no hpotk needed (ontology_from_hpotk
-        # remains for environments that have it)
         from p6_spark.sources.ontology import ontology_from_obographs
 
         ontology = ontology_from_obographs(spark, args.hpo)
@@ -69,8 +62,9 @@ def cmd_audit_excel(args: argparse.Namespace) -> int:
     runs at plan time against df.columns — no data is scanned."""
     from p6_spark.loader import load_workbook
     from p6_spark.schemas import classify_sheet
+    from p6_spark.session import get_spark
 
-    spark = _build_session()
+    spark = get_spark("p6x")
     tables = load_workbook(spark, args.workbook)
     entries = []
     for sheet, df in tables.items():
@@ -136,6 +130,7 @@ def cmd_run_query(args: argparse.Namespace) -> int:
     print the result (table or JSON lines). `p6x run-query --list` shows
     the full registry with tags."""
     from p6_spark.plans import QUERIES, get_queries
+    from p6_spark.session import get_spark
 
     get_queries()
     if args.list:
@@ -151,14 +146,13 @@ def cmd_run_query(args: argparse.Namespace) -> int:
     if args.name not in QUERIES:
         print(f"unknown query {args.name!r} (see --list)", file=sys.stderr)
         return 2
-    spark = _build_session()
+    spark = get_spark("p6x")
     df = QUERIES[args.name].build(spark, args.sf_dir)
     if args.explain:
         df.explain("formatted")
         return 0
-    rows = df.limit(args.limit).collect()
     if args.as_json:
-        for r in rows:
+        for r in df.limit(args.limit).collect():
             print(json.dumps(r.asDict(), default=str))
     else:
         df.limit(args.limit).show(args.limit, truncate=False)

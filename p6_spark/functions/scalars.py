@@ -10,19 +10,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Vocabulary maps — reference src/P6/mapper.py:67-80 (token -> canonical term).
-ZYGOSITY_MAP = {
-    "het": "heterozygous",
-    "hom": "homozygous",
-    "comphet": "compound_heterozygosity",
-    "hemi": "hemizygous",
-    "mosaic": "mosaic",
-}
-INHERITANCE_MAP = {
-    "unknown": "unknown",
-    "inherited": "inherited",
-    "denovo": "de_novo_mutation",
-}
 # GENO allelic-state CURIEs — reference src/P6/genotype.py:56-64.
 GENO_ALLELIC_STATE = {
     "heterozygous": "GENO:0000135",

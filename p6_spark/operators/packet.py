@@ -190,21 +190,15 @@ def assemble_phenopackets(
     )
 
 
-def write_packets_json(packets: DataFrame, out_dir: str) -> None:
-    """Scale path: one JSON document per packet row via the distributed
-    writer (reference: per-patient numbered files on the driver,
-    src/P6/__main__.py:200-212 — see write_packet_files for that shape)."""
-    packets.write.mode("overwrite").json(out_dir)
-
-
 def write_packet_files(packets: DataFrame, out_dir: str) -> int:
     """Driver-side per-patient numbered files mirroring the reference CLI
     (phenopacket_0.json, ...). One DataFrame ``collect`` of the packets'
     JSON: a single action, which also fills the observations on
     ``packets`` (``MappingResult.stats``). Not the RDD of ``toJSON()``:
     collecting it filled them with zero counts on a CSV workbook, and its
-    ``toLocalIterator`` runs one job per partition. Fine for
-    workbook-sized data; use write_packets_json at scale."""
+    ``toLocalIterator`` runs one job per partition. Every document
+    passes through the driver, which suits workbook-sized data
+    (reference src/P6/__main__.py:200-212)."""
     import json
     import os
 

@@ -3,13 +3,29 @@ harness tables, each with a DuckDB oracle.
 
 The clinical pipelines themselves run on workbook-shaped fixture tables in
 tests/ (mirroring the reference's own test strategy, SURVEY §5); these
-queries prove the *same Column expressions* — time normalization (F1),
-bool coercion with truthiness fallback (F2), email default (F3),
-chromosome canonicalization (F4), HPO cell parsing (F5/F6), HGVS
-parse/consistency (F7/J3), vocab maps + GENO codes (F9/F10), the
-zip-truncation explode (G1), the audit/dead-letter split (§2.9), and the
-collect_list nesting shape (G2/J1) — on deterministic columns synthesized
-from the harness tables so the DuckDB oracle can hash-check them.
+queries run reference operators on deterministic columns synthesized from
+the harness tables so the DuckDB oracle can hash-check them.
+
+Only some of them prove the Column expressions the pipelines run:
+time normalization (F1, ``normalize_time_like``), bool coercion (F2,
+``to_bool``), the email default (F3, ``email_or_default``), HPO cell
+parsing (F5/F6, ``is_nad``/``hpo_label``/``hpo_curie``), HGVS
+consistency and normalization (F7/J3, ``hgvs_raw_consistent``,
+``hgvs_g_normalize``), the GENO codes (F10, ``geno_code_for_zygosity``)
+and the vocabularies (``schemas.ZYGOSITY_MAP``/``INHERITANCE_MAP``) are
+what ``operators/`` uses too. The rest restate a pipeline step:
+
+- ``p6_chromosome_email`` checks ``canonical_chromosome`` (F4), but
+  ``operators/genotype.py`` builds its chromosome inline, and a missing
+  one becomes ``'chrnan'`` there, not NULL.
+- ``p6_zip_explode`` looks the vocabularies up with ``map_lookup`` (F9);
+  the pipeline builds its own ``create_map``. The zip-truncation explode
+  (G1) is the same shape, not the same code.
+- ``p6_audit_split`` uses its own email regex, not
+  ``schemas.EMAIL_PATTERN``, and its own valid/invalid rule column, not
+  ``audit.with_issues`` (§2.9).
+- ``p6_packet_nest`` shows the collect_list nesting shape (G2/J1); it
+  does not call ``operators.packet.assemble_phenopackets``.
 
 Reference spans cited per query. All expressions are JVM-side Column
 logic: at 100 TB these run inside whole-stage codegen with zero Python.
@@ -23,8 +39,6 @@ from pyspark.sql import functions as F
 from p6_spark.functions.hgvs import hgvs_g_normalize, hgvs_raw_consistent
 from p6_spark.functions.hpo import hpo_curie, hpo_label, is_nad
 from p6_spark.functions.scalars import (
-    INHERITANCE_MAP,
-    ZYGOSITY_MAP,
     canonical_chromosome,
     email_or_default,
     geno_code_for_zygosity,
@@ -33,6 +47,7 @@ from p6_spark.functions.scalars import (
     to_bool,
 )
 from p6_spark.plans.registry import register
+from p6_spark.schemas import INHERITANCE_MAP, ZYGOSITY_MAP
 from p6_spark.sources.tables import load_table
 
 

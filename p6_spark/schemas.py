@@ -78,16 +78,6 @@ INHERITANCE_MAP = {
     "denovo": "de_novo_mutation",
 }
 
-# GENO allelic-state codes keyed by canonical zygosity
-# (reference src/P6/genotype.py:57-64)
-GENO_ALLELIC_STATE_CODES = {
-    "heterozygous": "0000135",
-    "homozygous": "0000134",
-    "compound_heterozygosity": "0000191",
-    "hemizygous": "0000136",
-    "mosaic": "0000150",
-}
-
 # --- validation patterns (reference src/P6/genotype.py:44-45, phenotype.py:11-14)
 
 VALID_ID_PATTERN = r"^[A-Za-z0-9]+$"

@@ -107,23 +107,3 @@ def ontology_from_obographs(spark: SparkSession, path: str) -> DataFrame:
     ]
     return local_frame(spark, rows, ONTOLOGY_SCHEMA)
 
-
-def ontology_from_hpotk(spark: SparkSession, path: str) -> DataFrame:
-    """Flatten an hpotk MinimalOntology (JSON/.json.gz) to the term table.
-    Driver-side one-time load (reference src/P6/__main__.py:247-249),
-    gated behind import-try — hpotk is optional."""
-    try:
-        import hpotk
-    except ImportError as e:  # pragma: no cover - environment-dependent
-        raise RuntimeError(
-            "hpotk is not installed; build the term table another way "
-            "(ontology_from_records) or install hpotk"
-        ) from e
-    onto = hpotk.load_minimal_ontology(path)
-    rows = []
-    for term in onto.terms:
-        tid = term.identifier.value
-        ancestors = [a.value for a in onto.graph.get_ancestors(term.identifier)]
-        alt = [a.value for a in term.alt_term_ids]
-        rows.append((tid, term.name, bool(term.is_obsolete), alt, ancestors))
-    return local_frame(spark, rows, ONTOLOGY_SCHEMA)

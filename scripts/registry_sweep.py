@@ -76,22 +76,12 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from oracle_utils import compare, run_oracle
     from p6_spark.plans.registry import QUERIES, _load_all
-    from p6_spark.session import driver_memory, parallelism
+    from p6_spark.session import get_spark
 
     _load_all()
-    cpus = parallelism()
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", driver_memory())
-        .appName("registry_sweep")
-        .getOrCreate()
-    )
+    spark = get_spark("registry_sweep")
     spark.sparkContext.setLogLevel("ERROR")
 
     names = args.names or list(QUERIES)
@@ -135,7 +125,12 @@ def main() -> int:
             print(f"FAIL {name}: error: {e}", flush=True)
         rec["sec"] = round(time.time() - t0, 1)
         out["queries"][name] = rec
-        # free checkpoint blocks between queries (the r6 sweep lesson)
+        # localCheckpoint blocks persist for the session; over a full
+        # sweep they pile up into storage-memory pressure that slowed late
+        # checkpoint-heavy queries ~10x (q_graph_modularity: 124 s in-sweep
+        # vs 12 s standalone at sf1.0). clearCache() covers cached
+        # relations; the py4j getPersistentRDDs walk also reaches
+        # checkpoint RDD blocks but is version-brittle, so best-effort.
         spark.catalog.clearCache()
         try:
             for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():

@@ -10,6 +10,7 @@ import os
 import pytest
 
 from p6_spark.cli import main
+from test_mapping_stats import _jobs
 
 GENO_CSV = """Searchable Patient ID,Contact Email,Phasing,chrom,start,end,ref,alt,gene,hgvsg,hgvsc,hgvsp,zygosity,inheritance
 P1,u@example.com,Phased,16,100,100,A,G,ABCC6,chr16:g.100A>G,NM_000000.0:c.100A>G,NP_000000.0:p.Lys67Asn,het/hom,inherited/denovo
@@ -133,3 +134,16 @@ def test_run_query_list_and_exec(capsys, spark):
 
     rc = main(["run-query", "nope_not_a_query"])
     assert rc == 2
+
+
+
+def test_run_query_table_mode_runs_the_query_once(capsys, spark):
+    """Table mode prints through ``show`` alone; it does not also collect
+    the rows that JSON mode prints, so it runs no more jobs than JSON."""
+    argv = ["run-query", "q_kmv_distinct", "--sf-dir", "/root/testdata/sf0.001"]
+    main(argv + ["--json"])  # warm: the first run also lists the parquet files
+    json_rc, json_jobs = _jobs(spark, "run_query.json", lambda: main(argv + ["--json"]))
+    table_rc, table_jobs = _jobs(spark, "run_query.table", lambda: main(argv))
+    assert json_rc == table_rc == 0
+    assert "+" in capsys.readouterr().out.splitlines()[-2]  # show()'s closing border
+    assert 0 < table_jobs <= json_jobs, (table_jobs, json_jobs)

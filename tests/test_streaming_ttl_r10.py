@@ -94,7 +94,9 @@ def test_ttl_stream_equals_batch_on_finalized_windows(spark, tmp_path):
 
 def test_state_bounded_under_key_churn_script(tmp_path):
     """The committed measurement harness: TTL state flat at <= 3 chunks
-    of keys while the unbounded twin reaches the full key universe."""
+    of keys while the unbounded twin reaches the full key universe. The
+    script's JVM starts while the suite's is alive, so it pins a small
+    heap: two JVMs at the default heap could exhaust memory together."""
     out = str(tmp_path / "ttl.json")
     subprocess.run(
         [
@@ -105,6 +107,7 @@ def test_state_bounded_under_key_churn_script(tmp_path):
         check=True,
         cwd=REPO,
         capture_output=True,
+        env={**os.environ, "P6_SPARK_DRIVER_MEM": "1g"},
     )
     with open(out) as f:
         d = json.load(f)
