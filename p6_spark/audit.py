@@ -15,6 +15,17 @@ the NAD placeholder is the one warning that drops its row. Audit rows
 are column expressions (row-correlated, exactly-once) — never
 side-effecting accumulators, which Spark does not replay exactly-once on
 task retry.
+
+The checked frame is materialised once, by an eager ``localCheckpoint``
+in ``with_issues``. Three readings follow it: the kept rows (the write),
+the audit rows (the audit collect) and, for the phenotype sheet, the
+propagation check. Without the checkpoint each action re-optimizes and
+re-runs the whole projection (the regexes, the HGVS checks, the
+ontology join), which cost the write and the audit about as much
+Catalyst optimization as work. The checkpoint is eager because the
+phenotype records feed a broadcast: a lazy cut must not be read twice
+before it is materialised, nor ride on a broadcast build (the rule of
+``operators/graph.py:_materialize``).
 """
 
 from __future__ import annotations
@@ -89,9 +100,16 @@ def issue(cond: Column, level: str, message: Column, drop: bool | None = None) -
 
 
 def with_issues(df: DataFrame, *issues: Column) -> DataFrame:
-    """``df`` plus its ``issues`` column: the raised ones of ``issues``."""
+    """``df`` plus its ``issues`` column: the raised ones of ``issues``.
+
+    The result is an eager ``localCheckpoint``: one job evaluates the
+    projection here, and every later reading (``kept``, ``issue_audit``,
+    the phenotype propagation check) scans the stored blocks instead of
+    re-optimizing and re-running it. Eager, not lazy, because a lazy cut
+    read by two actions, or first materialised under a broadcast build,
+    is evaluated more than once (see the module docstring)."""
     raised = F.filter(F.array(*issues), lambda i: i.isNotNull()) if issues else F.array()
-    return df.withColumn("issues", raised.cast(ISSUES_TYPE))
+    return df.withColumn("issues", raised.cast(ISSUES_TYPE)).localCheckpoint(eager=True)
 
 
 def kept(checked: DataFrame) -> DataFrame:

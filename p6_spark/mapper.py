@@ -9,6 +9,15 @@ Errors drop rows/tables, never the run (§2.9); the combined audit
 DataFrame is the second output. The counts of ``stats()`` are an
 ``Observation`` on the packets, so the action that writes them fills
 the counts too.
+
+Jobs per op, with all five sheets and an ontology: ``apply_mapping``
+runs 6 (one eager checkpoint of each sheet's checked frame, see
+``audit.with_issues``, and the broadcast ontology of the phenotype
+join); the packet write runs 2 (the co-group shuffle, the result);
+``stats()`` after the write runs none; the audit collect runs 3 (the
+broadcast sheet terms and the distinct shuffle of the phenotype
+propagation check, the result). Neither output action re-runs a
+sheet's projection.
 """
 
 from __future__ import annotations

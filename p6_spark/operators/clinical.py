@@ -44,9 +44,11 @@ def map_disease_table(
     if bail is not None:
         return bail
     df = promote_patient_id(df, "diseases").withColumn("_seq", F.monotonically_increasing_id())
-    label = F.trim(F.coalesce(F.col("disease_label").cast("string"), F.lit(""))) if (
-        "disease_label" in df.columns
-    ) else F.lit("")
+    if "disease_label" in df.columns:
+        label = F.trim(F.coalesce(F.col("disease_label").cast("string"), F.lit("")))
+        label = F.when(label == "", F.lit(None).cast("string")).otherwise(label)
+    else:
+        label = F.lit(None).cast("string")
     return _stage(
         with_issues(df),
         step,
@@ -54,7 +56,7 @@ def map_disease_table(
         "_seq",
         F.col("patient_ID").cast("string").alias("patient_ID"),
         F.trim(F.col("disease_term").cast("string")).alias("disease_term"),
-        F.when(label == "", F.lit(None).cast("string")).otherwise(label).alias("disease_label"),
+        label.alias("disease_label"),
         F.trim(F.col("disease_onset").cast("string")).alias("disease_onset"),
         to_bool(F.col("disease_status")).alias("disease_status"),
     )
@@ -86,11 +88,11 @@ def map_measurement_table(
             F.lit("' to float"),
         ),
     )
-    ts = (
-        normalize_time_like(F.col("measurement_timestamp"))
-        if "measurement_timestamp" in df.columns
-        else F.lit("")
-    )
+    if "measurement_timestamp" in df.columns:
+        ts = normalize_time_like(F.col("measurement_timestamp"))
+        ts = F.when(ts == "", F.lit(None).cast("string")).otherwise(ts)
+    else:
+        ts = F.lit(None).cast("string")
     return _stage(
         with_issues(df, rejected),
         step,
@@ -100,9 +102,7 @@ def map_measurement_table(
         F.trim(F.col("measurement_type").cast("string")).alias("measurement_type"),
         F.col("_value").alias("measurement_value"),
         F.trim(F.col("measurement_unit").cast("string")).alias("measurement_unit"),
-        F.when(ts == "", F.lit(None).cast("string")).otherwise(ts).alias(
-            "measurement_timestamp"
-        ),
+        ts.alias("measurement_timestamp"),
     )
 
 

@@ -23,6 +23,15 @@ ancestors (from ``/proc/self/cgroup``), so a limited sub-cgroup on a host
 without a cgroup namespace (a systemd slice, a CI runner) counts too; the
 limit files at the top of the cgroup mount are the fallback.
 
+PySpark's DataFrame call-site capture is off
+(``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+PySpark wraps every DataFrame and ``functions`` call in a capture of the
+Python call site, which costs an active-session lookup and a conf read
+through py4j per call: it about doubled the py4j round trips of building
+the clinical plans. The trade-off: an error raised by a DataFrame
+operation no longer names the Python line that built the failing
+expression; the JVM error and its plan context are unchanged.
+
 On a real cluster the same builder applies — only master/memory change.
 """
 
@@ -129,6 +138,11 @@ def get_spark(
     ``extra_conf`` overlays builder configs (measurement harnesses, e.g.
     perfbench's traced run re-enabling the UI for its stage-metrics REST
     API) — only effective when this call CREATES the session.
+
+    DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``)
+    is always off: PySpark then captures no Python call site per API
+    call, which halves the py4j round trips of plan building, and in
+    exchange a DataFrame error no longer names its Python call site.
     """
     if cpus is None:
         cpus = parallelism()
@@ -142,6 +156,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # no per-call Python call-site capture (see the docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -44,6 +44,29 @@ def test_disease_empty_label_becomes_null(spark):
     assert r.valid.collect()[0]["disease_label"] is None
 
 
+def test_absent_optional_columns_are_string_nulls(spark):
+    diseases = map_disease_table(
+        spark,
+        df_of(
+            spark,
+            ["Patient ID", "disease_term", "disease_onset", "disease_status"],
+            [("P1", "OMIM:266600", "2020-01-01", "1")],
+        ),
+    ).valid
+    labs = map_measurement_table(
+        spark,
+        df_of(
+            spark,
+            ["Patient ID", "measurement_type", "measurement_value", "measurement_unit"],
+            [("P1", "LOINC:4548-4", "5.4", "mmol/L")],
+        ),
+    ).valid
+    assert diseases.collect()[0]["disease_label"] is None
+    assert labs.collect()[0]["measurement_timestamp"] is None
+    assert diseases.schema["disease_label"].dataType.simpleString() == "string"
+    assert labs.schema["measurement_timestamp"].dataType.simpleString() == "string"
+
+
 def test_disease_missing_columns_rejected(spark):
     r = map_disease_table(
         spark, df_of(spark, ["Patient ID", "disease_term"], [("P1", "OMIM:266600")])

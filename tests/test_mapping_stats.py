@@ -1,11 +1,14 @@
-"""Jobs per output of the clinical op, and ``MappingResult.stats()``.
+"""Jobs per step of the clinical op, and ``MappingResult.stats()``.
 
 The op is load -> apply_mapping -> write -> stats() -> audit.collect(),
-as ``p6x parse-excel`` runs it. Each input is a ``LocalRelation`` and
-each output comes from one action: the counts of ``stats()`` are an
-``Observation`` that the write fills, so ``stats()`` after the write runs
-no job, and the write and the audit run a fixed number of jobs each.
-The counts are read per named job group from the status tracker.
+as ``p6x parse-excel`` runs it. Each input is a ``LocalRelation``, and
+``apply_mapping`` materialises each sheet's checked frame once (an eager
+checkpoint per sheet), so the write and the audit read the checkpoints
+and neither re-runs a sheet's projection. Each output comes from one
+action: the counts of ``stats()`` are an ``Observation`` that the write
+fills, so ``stats()`` after the write runs no job, and apply, the write
+and the audit run a fixed number of jobs each. The counts are read per
+named job group from the status tracker.
 """
 
 from __future__ import annotations
@@ -95,7 +98,9 @@ def _jobs(spark, group: str, fn):
 
 def test_one_action_per_output(spark, ontology, in_memory_workbook, tmp_path):
     tables = loader.load_workbook(spark, in_memory_workbook)
-    result = apply_mapping(spark, tables, ontology=ontology)
+    result, apply_jobs = _jobs(
+        spark, "op.apply", lambda: apply_mapping(spark, tables, ontology=ontology)
+    )
     written, write_jobs = _jobs(
         spark, "op.write", lambda: write_packet_files(result.packets, str(tmp_path / "p"))
     )
@@ -112,10 +117,11 @@ def test_one_action_per_output(spark, ontology, in_memory_workbook, tmp_path):
         "n_patients": 4,
     }
     assert len(issues) == 9
-    # the write: one shuffle of all record kinds, the broadcast ontology,
-    # the result; the audit: the broadcast ontology, the broadcast sheet
-    # terms and one shuffle of the propagation check, the result
-    assert (write_jobs, stats_jobs, audit_jobs) == (3, 0, 5)
+    # apply: one eager checkpoint per sheet (5), the broadcast ontology of
+    # the phenotype join; the write: the co-group shuffle of all record
+    # kinds, the result; the audit: the broadcast sheet terms and the
+    # distinct shuffle of the propagation check, the result
+    assert (apply_jobs, write_jobs, stats_jobs, audit_jobs) == (6, 2, 0, 3)
 
 
 def test_stats_before_any_action_runs_one_count(spark, ontology, in_memory_workbook):

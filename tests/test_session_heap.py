@@ -5,7 +5,8 @@ machine (the old 48g default on a 15.7 GB box) lets G1 grow the JVM until
 the kernel kills it, and every later Spark test then fails with
 ConnectionRefused. The default parallelism is the CPUs the process may run
 on, not a constant (the old ``local[32]`` on a 4-core box), and
-``SPARK_GRAFT_CPUS`` still overrides it."""
+``SPARK_GRAFT_CPUS`` still overrides it. PySpark's per-call capture of the
+Python call site (DataFrame debugging) is off in every session."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ import os
 from types import SimpleNamespace
 
 import pytest
+from pyspark.errors.utils import is_debugging_enabled
 
 from p6_spark import session
 
@@ -104,13 +106,15 @@ def test_env_override(monkeypatch):
 
 def test_live_session_uses_derived_heap(spark):
     """The session get_spark built carries driver_memory() and the
-    default parallelism, and the JVM's real max heap fits in the
-    machine's memory."""
+    default parallelism, the JVM's real max heap fits in the machine's
+    memory, and PySpark captures no call site per DataFrame call."""
     assert spark.sparkContext.getConf().get("spark.driver.memory") == session.driver_memory()
     assert spark.sparkContext.master == f"local[{session.parallelism()}]"
     max_heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
     if not os.environ.get("P6_SPARK_DRIVER_MEM"):
         assert max_heap <= session.machine_memory_bytes()
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
 
 
 class _FakeBuilder:
@@ -142,6 +146,7 @@ def test_default_parallelism_is_the_cpus_the_process_may_use(monkeypatch):
     session.get_spark("parallelism_probe")
     assert builder.conf["master"] == "local[3]"
     assert builder.conf["spark.sql.shuffle.partitions"] == "3"
+    assert builder.conf["spark.python.sql.dataFrameDebugging.enabled"] == "false"
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
     session.get_spark("parallelism_probe")
     assert builder.conf["master"] == "local[2]"
